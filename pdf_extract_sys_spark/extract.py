@@ -1,8 +1,8 @@
 """Per-batch extraction orchestration: input span rows → ordered output spans.
 
 This module is the ONLY Python that runs on the hot path, invoked from
-``pipeline.py`` via ``mapInArrow`` (whole docs, zero shuffle) or ``applyInPandas``
-(salted mega-doc chunks). Everything inside is vectorized pandas over Arrow batches.
+``pipeline.py`` via ``mapInArrow``, over whole docs (zero shuffle) or over salted
+mega-doc chunks. Everything inside is vectorized pandas over Arrow batches.
 
 Routing semantics (reference: ``backend/app/main.py:171-205``):
   * a doc is *searchable* iff ANY of its pdf_chars pages has stripped text length
@@ -25,6 +25,8 @@ final ``offset`` is the 0-based enumeration of that order per doc.
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import numpy as np
@@ -499,22 +501,44 @@ def _rows_to_record_batch(
     )
 
 
-def _pin_worker_threads() -> None:
-    """Inside an executor's Python worker, pyarrow's internal pool must not fan out
-    to every host core — Spark already owns the core-level parallelism (one worker
-    per task slot). Without this, a local[8] run secretly uses all 32 cores and
-    scaling measurements lie."""
+def _prepare_worker() -> None:
+    """Per-task set-up of a Python worker, called at the top of every Python entry
+    point of the extraction plan: ``extract_map_in_arrow``,
+    ``extract_chunk_map_in_arrow`` and the mega-doc classifier UDF
+    ``pipeline._pdf_stripped_len``. Its effects last for the rest of the
+    (reused) worker's life; repeat calls cost microseconds.
+
+      * Pin pyarrow's thread pools to one thread. Spark already owns the
+        core-level parallelism (one worker per task slot); without the pin a
+        local[8] run secretly uses all 32 cores and scaling measurements lie.
+        The classifier UDF calls this too, so a worker whose first task is that
+        ArrowEvalPython no longer fans pyarrow out to every host core.
+      * Drop every cached ``zipimporter`` from ``sys.path_importer_cache``.
+        PySpark's worker calls ``importlib.invalidate_caches()`` before each
+        task, and before Python 3.13 that makes each cached zipimporter re-read
+        its whole archive directory (pyspark.zip, the py4j zip and the
+        spark-core jar: about 0.2 s of CPU per task on a 4-core host, more than
+        the extraction of a typical batch). With the entries gone there is
+        nothing to re-read until an import scans an archive path again, which
+        a warmed-up worker rarely does. That import builds a fresh importer
+        that reads the archive as it is then, so imports behave the same on
+        every Python version.
+    """
     try:
         if pa.cpu_count() != 1:
             pa.set_cpu_count(1)
             pa.set_io_thread_count(1)
     except Exception:
         pass
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
 
 
 def extract_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """The mapInArrow function: corpus batches in, EXTRACTED_ARROW batches out."""
-    _pin_worker_threads()
+    _prepare_worker()
     for batch in batches:
         if batch.num_rows == 0:
             continue
@@ -531,7 +555,7 @@ def extract_chunk_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa
     extra joins/aggregations."""
     from .schema import CHUNK_MARKER_OFF, CHUNK_OUT_ARROW, KIND_CHUNK_MARKER
 
-    _pin_worker_threads()
+    _prepare_worker()
     import pyarrow.compute as pc
 
     for batch in batches:
@@ -562,7 +586,7 @@ def extract_chunk_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa
 
 
 def extract_batch_pandas(docs: pd.DataFrame) -> pd.DataFrame:
-    """Pandas-level convenience used by tests and the applyInPandas mega-doc path:
+    """Test convenience (no production caller):
     (doc_id, spans: list[dict]) → EXTRACTED_ARROW-shaped pandas frame."""
     doc_ids = docs["doc_id"].to_numpy(dtype=object)
     n = docs["spans"].str.len().fillna(0).astype(np.int64).to_numpy()

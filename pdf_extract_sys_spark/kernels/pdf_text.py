@@ -483,24 +483,6 @@ def decode_pdf_char_events(pages: pd.DataFrame) -> tuple[pd.DataFrame, pd.Index]
     return df, bad
 
 
-def page_text_lengths(events: pd.DataFrame) -> pd.DataFrame:
-    """len(full_text.strip()) per (doc_id, page) — compat wrapper."""
-    if not len(events):
-        return pd.DataFrame({"doc_id": [], "page": [], "stripped_len": []})
-    ev = _events_from_frame(events)
-    lens = page_stripped_lengths_core(ev)
-    tab = ev.page_tab
-    counts = np.bincount(ev.prow, minlength=len(tab))
-    present = counts > 0
-    return pd.DataFrame(
-        {
-            "doc_id": tab["doc_id"].to_numpy()[present],
-            "page": tab["page"].to_numpy()[present],
-            "stripped_len": lens[present],
-        }
-    )
-
-
 def payload_stripped_lengths(payloads: pd.Series) -> pd.Series:
     """Per-payload ``len(full_text.strip())`` (the searchable-classifier input,
     main.py:62-64); -1 for malformed payloads. Used by the salted mega-doc path."""

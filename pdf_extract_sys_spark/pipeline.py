@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .extract import SEARCHABLE_THRESHOLD, extract_chunk_map_in_arrow, extract_map_in_arrow
+from .extract import (
+    SEARCHABLE_THRESHOLD,
+    _prepare_worker,
+    extract_chunk_map_in_arrow,
+    extract_map_in_arrow,
+)
 from .schema import (
     CHUNK_OUT_SCHEMA,
     EXTRACTED_SCHEMA,
@@ -47,6 +52,7 @@ def _pdf_stripped_len(payload: pd.Series) -> pd.Series:
     -1 = malformed). ArrowEvalPython node — not per-row Python."""
     from .kernels.pdf_text import payload_stripped_lengths
 
+    _prepare_worker()
     return payload_stripped_lengths(payload)
 
 

@@ -1378,6 +1378,12 @@ def connected_components(
     nodes: (doc_id); edges: (doc_a, doc_b), symmetrized here.
     Returns (doc_id, label), label = min doc_id of the component.
 
+    Input contract (not checked here, since a check would cost a shuffle or an
+    action): ``nodes.doc_id`` must be unique and non-null. The propagate step
+    groups by doc_id, so duplicate node rows collapse to one output row, and
+    NULL ids group together and can pick up a label from NULL edge endpoints.
+    Edge endpoints absent from ``nodes`` are dropped.
+
     Fixpoint argument: labels decrease monotonically and always name a node in
     the same component; doubling only accelerates (label2 ≤ label). If a full
     round changes nothing then the propagation step alone was at fixpoint, which
