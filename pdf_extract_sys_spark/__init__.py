@@ -16,7 +16,7 @@ Modules:
   - ``kernels.*``     — pure-pandas vectorized extraction kernels (unit-testable, no Spark)
   - ``extract``       — per-Arrow-batch orchestration of the kernels + sentinel totality
   - ``pipeline``      — the Spark plan: partitioning, mega-doc salting, reassembly
-  - ``checkpoint``    — checkpoint table, anti-join resume, per-partition lineage+metrics
+  - ``checkpoint``    — checkpoint table, resume planned from it, per-partition lineage+metrics
   - ``corpus``        — deterministic synthetic corpus generator (fixtures + bench slices)
   - ``job``           — spark-submit entrypoint
 """

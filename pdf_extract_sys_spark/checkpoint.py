@@ -5,8 +5,10 @@ protocol (``backend/app/main.py:94-125, 276-314`` — which has a lost-update wi
 SURVEY.md §3.2) with a structured checkpoint table + deterministic partitioning:
 
   * ``partition_id = pmod(xxhash64(doc_id), P)`` — stable, input-order-independent.
-  * resume = broadcast LEFT ANTI join of the corpus against the checkpoint rows
-    with status='completed' for this run_id (SURVEY.md §2 C1).
+  * resume is planned from the checkpoint table alone (SURVEY.md §2 C1): the
+    pending ids are ``range(P)`` minus the partitions with a status='completed'
+    row for this run_id; the corpus is read only if some are pending, and then
+    filtered to them on partition_id.
   * output written with **dynamic partition overwrite** partitioned by
     partition_id: a re-run of a half-written partition atomically replaces it —
     no duplicates, no orphans (Iceberg's overwritePartitions gives the same
@@ -27,9 +29,11 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .pipeline import DEFAULT_SALT_THRESHOLD, extract_corpus
 from .schema import CHECKPOINT_SCHEMA
@@ -65,10 +69,11 @@ def _require_backend(spark: SparkSession, *refs: str) -> None:
         )
 
 
-def _read_table(spark: SparkSession, ref: str) -> DataFrame:
+def _read_table(spark: SparkSession, ref: str, schema: StructType | None = None) -> DataFrame:
+    """A known parquet ``schema`` spares the Spark job that infers it from a footer."""
     if is_iceberg_ref(ref):
         return spark.read.table(ref[len(ICEBERG_PREFIX):])
-    return spark.read.parquet(ref)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(ref)
 
 
 _TABLE_MISSING = ("TABLE_OR_VIEW_NOT_FOUND", "Table or view not found")
@@ -133,27 +138,24 @@ def with_partition_id(corpus: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
-def completed_partitions(spark: SparkSession, checkpoint_path: str, run_id: str) -> DataFrame:
-    """Distinct partition_ids already completed for run_id (empty frame if the
-    checkpoint table does not exist yet). Only PATH/TABLE_NOT_FOUND means "fresh
-    run"; any other read error (corrupt footer, permission) propagates —
-    silently restarting the whole run on a corrupted checkpoint table would
-    mask it."""
+def completed_partitions(spark: SparkSession, checkpoint_path: str, run_id: str) -> set[int]:
+    """Partition ids already completed for run_id, collected to the driver (the
+    empty set, without a Spark job, if the checkpoint table does not exist yet).
+    Only PATH/TABLE_NOT_FOUND means "fresh run"; any other read error (corrupt
+    footer, permission) propagates — silently restarting the whole run on a
+    corrupted checkpoint table would mask it."""
     from pyspark.errors import AnalysisException
 
     try:
-        cp = _read_table(spark, checkpoint_path)
+        cp = _read_table(spark, checkpoint_path, CHECKPOINT_SCHEMA)
     except AnalysisException as e:
         s = str(e)
         if any(m in s for m in ("PATH_NOT_FOUND", "Path does not exist",
                                 "TABLE_OR_VIEW_NOT_FOUND")):
-            return spark.createDataFrame([], "partition_id INT")
+            return set()
         raise
-    return (
-        cp.filter((F.col("run_id") == run_id) & (F.col("status") == "completed"))
-        .select("partition_id")
-        .distinct()
-    )
+    rows = cp.filter((F.col("run_id") == run_id) & (F.col("status") == "completed"))
+    return {r[0] for r in rows.select("partition_id").collect()}
 
 
 def run_extraction(
@@ -168,23 +170,27 @@ def run_extraction(
     salted_parallelism: int | None = None,
     process_only: list[int] | None = None,
 ) -> RunSummary:
-    """One (possibly resumed) extraction run. ``process_only`` restricts the run to
-    a subset of pending partitions — used by tests to simulate a mid-run crash."""
+    """One (possibly resumed) extraction run, planned from the checkpoint table
+    alone. Pending partitions are the ids in ``range(num_partitions)`` with no
+    completed row for ``run_id``, empty ones included (they complete with
+    zero-count rows, and ``partitions_pending`` counts them). ``process_only``
+    (a simulated crash, in tests and the benchmark) narrows them; its ids
+    outside the range are ignored. With nothing pending the input is not read."""
     t0 = time.monotonic()
     _require_backend(spark, input_path, output_path, checkpoint_path)
-    corpus = with_partition_id(_read_table(spark, input_path), num_partitions)
 
     done = completed_partitions(spark, checkpoint_path, run_id)
-    pending = corpus.join(F.broadcast(done), "partition_id", "left_anti")
-    if process_only is not None:
-        pending = pending.filter(F.col("partition_id").isin([int(p) for p in process_only]))
-
-    pending_parts = [r[0] for r in pending.select("partition_id").distinct().collect()]
-    n_done_before = done.count()
+    todo = [p for p in range(num_partitions) if p not in done]
+    only = None if process_only is None else {int(p) for p in process_only}
+    pending_parts = [p for p in todo if only is None or p in only]
+    n_done_before = num_partitions - len(todo)
     if not pending_parts:
         return RunSummary(run_id, num_partitions, 0, n_done_before, 0, 0, 0, 0,
                           time.monotonic() - t0)
 
+    pending = with_partition_id(_read_table(spark, input_path), num_partitions).filter(
+        F.col("partition_id").isin(pending_parts)
+    )
     extracted = extract_corpus(
         pending, salt_threshold=salt_threshold, salted_parallelism=salted_parallelism
     )
@@ -195,54 +201,34 @@ def run_extraction(
     _write_output(extracted, output_path)
 
     # metrics from the WRITTEN data (column-pruned scan: 4 small columns)
-    written = _read_table(spark, output_path).filter(
+    written = _read_table(spark, output_path, extracted.schema).filter(
         F.col("partition_id").isin(pending_parts)
     )
-    agg = (
-        written.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("docs_done"),
-            F.sum("n_spans").alias("spans_emitted"),
-            F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-            F.sum("bytes_in").alias("bytes_processed"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("status", F.lit("completed"))
-        .withColumn("input_path", F.lit(input_path))
-        .withColumn("updated_at", F.current_timestamp())
-        .select([f.name for f in CHECKPOINT_SCHEMA.fields])
-    )
-    # a pending partition with zero input docs still completes (checkpoint row with
-    # zero counts) so resume will not retry it forever
-    from datetime import datetime
-
-    # agg was select-ed into CHECKPOINT_SCHEMA field order:
-    # (run_id, partition_id, status, docs_done, spans_emitted, parse_failures,
-    #  bytes_processed, input_path, updated_at)
-    rows = [tuple(r) for r in agg.collect()]
-    seen = {r[1] for r in rows}
+    metrics = {
+        r[0]: tuple(r[1:])
+        for r in written.groupBy("partition_id").agg(
+            F.count("*"),
+            F.sum("n_spans"),
+            F.sum(F.col("parse_failed").cast("long")),
+            F.sum("bytes_in"),
+        ).collect()
+    }
+    # rows in CHECKPOINT_SCHEMA field order; a pending partition with zero input
+    # docs still completes (zero counts) so resume will not retry it forever
     now = datetime.now()
-    rows += [
-        (run_id, int(p), "completed", 0, 0, 0, 0, input_path, now)
-        for p in pending_parts
-        if p not in seen
-    ]
+    rows = [(run_id, p, "completed", *metrics.get(p, (0, 0, 0, 0)), input_path, now)
+            for p in pending_parts]
     _append_checkpoint(spark.createDataFrame(rows, CHECKPOINT_SCHEMA), checkpoint_path)
 
-    tot = {
-        "docs": sum(r[3] for r in rows),
-        "spans": sum(r[4] or 0 for r in rows),
-        "fail": sum(r[5] or 0 for r in rows),
-        "bytes": sum(r[6] or 0 for r in rows),
-    }
+    docs, spans, fails, nbytes = (int(sum(r[i] or 0 for r in rows)) for i in (3, 4, 5, 6))
     return RunSummary(
         run_id=run_id,
         partitions_total=num_partitions,
         partitions_pending=len(pending_parts),
         partitions_done=n_done_before + len(pending_parts),
-        docs_done=tot["docs"],
-        spans_emitted=int(tot["spans"]),
-        parse_failures=int(tot["fail"]),
-        bytes_processed=int(tot["bytes"]),
+        docs_done=docs,
+        spans_emitted=spans,
+        parse_failures=fails,
+        bytes_processed=nbytes,
         wall_seconds=time.monotonic() - t0,
     )

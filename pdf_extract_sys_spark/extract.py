@@ -504,15 +504,13 @@ def _rows_to_record_batch(
 def _prepare_worker() -> None:
     """Per-task set-up of a Python worker, called at the top of every Python entry
     point of the extraction plan: ``extract_map_in_arrow``,
-    ``extract_chunk_map_in_arrow`` and the mega-doc classifier UDF
-    ``pipeline._pdf_stripped_len``. Its effects last for the rest of the
+    ``extract_chunk_map_in_arrow`` and the mega-doc router
+    ``pipeline._route_mega_docs``. Its effects last for the rest of the
     (reused) worker's life; repeat calls cost microseconds.
 
       * Pin pyarrow's thread pools to one thread. Spark already owns the
         core-level parallelism (one worker per task slot); without the pin a
         local[8] run secretly uses all 32 cores and scaling measurements lie.
-        The classifier UDF calls this too, so a worker whose first task is that
-        ArrowEvalPython no longer fans pyarrow out to every host core.
       * Drop every cached ``zipimporter`` from ``sys.path_importer_cache``.
         PySpark's worker calls ``importlib.invalidate_caches()`` before each
         task, and before Python 3.13 that makes each cached zipimporter re-read

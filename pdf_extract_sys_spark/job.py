@@ -7,8 +7,8 @@ Example:
         --checkpoint /data/checkpoints --partitions 4096
 
 Re-running the same command after a failure resumes from the checkpoint table —
-completed partitions are skipped (broadcast anti-join), half-written ones are
-atomically overwritten.
+completed partitions (read from the checkpoint table alone) are skipped,
+half-written ones are atomically overwritten.
 """
 
 from __future__ import annotations

@@ -8,23 +8,29 @@ local[N]:
     (doc_id, spans).
   * **Mega docs** (the skew tail, size(spans) > salt_threshold): the reference has
     no answer for these (it capped pages at 2000 and sharded per-container,
-    main.py:167-170 / load_balancer.py); here each one is exploded to per-span rows,
-    routing (the doc-level searchable classifier, main.py:57-66) is pre-computed on
-    the tiny pdf_chars subset, rows are round-robin repartitioned across the cluster
-    (this IS the salting — one doc's pages land on many executors), extracted
-    chunk-wise, and reassembled with groupBy(doc_id) + array_sort, sealing the final
-    reading-order offsets. Shuffles touch only the mega tail, never the main corpus.
+    main.py:167-170 / load_balancer.py); here one ``mapInArrow`` pass over the whole
+    docs tags each with its routing (the doc-level searchable classifier,
+    main.py:57-66), each is exploded to per-span rows, rows are round-robin
+    repartitioned across the cluster (this IS the salting — one doc's pages land
+    on many executors), extracted chunk-wise, and reassembled with
+    groupBy(doc_id) + array_sort, sealing the final reading-order offsets.
+    Shuffles touch only the mega tail, never the main corpus.
 
 The two sub-plans union to one DataFrame with EXTRACTED_SCHEMA. Plan audit:
-only PythonMapInArrow / ArrowEvalPython nodes — never BatchEvalPython (north rule).
+only MapInArrow Python nodes — never BatchEvalPython (north rule).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import types as T
 
 from .extract import (
     SEARCHABLE_THRESHOLD,
@@ -32,6 +38,7 @@ from .extract import (
     extract_chunk_map_in_arrow,
     extract_map_in_arrow,
 )
+from .kernels.pdf_text import payload_stripped_lengths
 from .schema import (
     CHUNK_OUT_SCHEMA,
     EXTRACTED_SCHEMA,
@@ -43,24 +50,44 @@ from .schema import (
 DEFAULT_SALT_THRESHOLD = 256  # spans per doc above which a doc is salted
 
 
-from pyspark.sql.types import LongType  # noqa: E402
-
-
-@pandas_udf(LongType())
-def _pdf_stripped_len(payload: pd.Series) -> pd.Series:
-    """Vectorized searchable-classifier input (len of stripped page text;
-    -1 = malformed). ArrowEvalPython node — not per-row Python."""
-    from .kernels.pdf_text import payload_stripped_lengths
-
+def _route_mega_docs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow over whole mega docs: (doc_id, spans) in, (doc_id, spans,
+    route) out, ``spans`` passed through untouched. The doc-level searchable
+    classifier (main.py:57-66) runs here because a salted chunk cannot see the
+    sibling pages that decide it: route = 'text' iff ANY pdf_chars page's
+    stripped text is longer than SEARCHABLE_THRESHOLD, else 'ocr' (docs with
+    no pdf_chars page, NULL payloads and malformed ones, length -1, included)."""
     _prepare_worker()
-    return payload_stripped_lengths(payload)
+    for batch in batches:
+        spans = batch.column("spans")
+        offs = spans.offsets.to_numpy()
+        parent = np.repeat(np.arange(len(spans)), np.diff(offs))
+        # StructArray.flatten folds a NULL span's validity into its fields
+        fields = spans.values.slice(offs[0], offs[-1] - offs[0]).flatten()
+        st = spans.type.value_type
+        kind = fields[st.get_field_index("kind")]
+        text = fields[st.get_field_index("text")]
+        # NULL payloads are left out: decode_pdf_core takes strings only
+        is_pdf = pc.fill_null(pc.and_(pc.equal(kind, KIND_PDF_CHARS), pc.is_valid(text)), False)
+        plens = payload_stripped_lengths(
+            pd.Series(pc.filter(text, is_pdf).to_numpy(zero_copy_only=False))
+        ).to_numpy()
+        pdf_doc = parent[is_pdf.to_numpy(zero_copy_only=False)]
+        searchable = np.zeros(len(spans), dtype=bool)
+        searchable[pdf_doc[plens > SEARCHABLE_THRESHOLD]] = True
+        route = pa.array(np.where(searchable, "text", "ocr"), pa.string())
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("doc_id"), spans, route], names=["doc_id", "spans", "route"]
+        )
 
 
 def _extract_salted(mega: DataFrame, salted_parallelism: int | None) -> DataFrame:
-    """Mega-doc path: explode → classify → spread → chunk-extract → reassemble."""
-    rows = mega.select(
+    """Mega-doc path: classify → explode → spread → chunk-extract → reassemble."""
+    routed_schema = T.StructType(mega.schema.fields + [T.StructField("route", T.StringType())])
+    routed = mega.mapInArrow(_route_mega_docs, routed_schema).select(
         "doc_id",
         F.posexplode("spans").alias("pos", "s"),
+        "route",
     ).select(
         "doc_id",
         F.col("pos").cast("long").alias("pos"),
@@ -68,22 +95,8 @@ def _extract_salted(mega: DataFrame, salted_parallelism: int | None) -> DataFram
         F.col("s.text").alias("text"),
         F.col("s.media_ref").alias("media_ref"),
         F.col("s.offset").cast("long").alias("offset"),
-    )
-
-    # doc-level routing: ANY pdf_chars page with stripped len > 50 → native text.
-    # Tiny frame (one bool per mega doc) → broadcast back onto the spans.
-    flags = (
-        rows.filter(F.col("kind") == KIND_PDF_CHARS)
-        .select("doc_id", _pdf_stripped_len("text").alias("plen"))
-        .groupBy("doc_id")
-        .agg(F.max(F.col("plen") > F.lit(SEARCHABLE_THRESHOLD)).alias("searchable"))
-    )
-    routed = rows.join(F.broadcast(flags), "doc_id", "left").withColumn(
         "route",
-        F.when(F.coalesce(F.col("searchable"), F.lit(False)), F.lit("text")).otherwise(
-            F.lit("ocr")
-        ),
-    ).drop("searchable")
+    )
 
     # salting: round-robin spread of one doc's spans across the cluster
     chunks = routed.repartition(salted_parallelism) if salted_parallelism else routed.repartition(

@@ -7,12 +7,13 @@
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pandas as pd
 import pytest
 from conftest import golden_tuples, rows_to_tuples
-from fixtures_def import fixture_docs
+from fixtures_def import FILLER, fixture_docs
 
 from pdf_extract_sys_spark import corpus as C
 from pdf_extract_sys_spark.checkpoint import run_extraction, with_partition_id
@@ -51,13 +52,52 @@ def test_e2e_golden_equality(spark, tmp_path, small_corpus, goldens, goldens_see
         assert spans == golden_tuples(gold[did]), did
 
 
+def _ocr_page(word: str) -> str:
+    return C.encode_ocr_page([(word, 90, 10, 20, 60, 12, 1, 1)])
+
+
+# multi-page docs whose doc-level routing a single salted chunk cannot decide
+ROUTING_DOCS = pd.DataFrame(
+    [
+        # the only searchable pdf_chars page is the doc's last span: 'text'
+        # wins, so the OCR page is dropped
+        {"doc_id": "R01", "spans": [
+            *(C.span("pdf_chars", C.encode_pdf_text(f"Short page {i}."), None, i)
+              for i in range(4)),
+            C.span("ocr_words", _ocr_page("Ignored."), None, 4),
+            C.span("pdf_chars", C.encode_pdf_text(FILLER), None, 5),
+        ]},
+        # only ocr_words spans: 'ocr'
+        {"doc_id": "R02", "spans": [
+            C.span("ocr_words", _ocr_page(f"Scanned{i}."), None, i) for i in range(4)
+        ]},
+        # a pdf_chars span with NULL text beside a searchable page: a sentinel
+        {"doc_id": "R03", "spans": [
+            C.span("pdf_chars", C.encode_pdf_text(FILLER), None, 0),
+            C.span("pdf_chars", None, None, 1),
+            C.span("ocr_words", _ocr_page("Scanned."), None, 2),
+        ]},
+    ]
+)
+
+
 def test_salt_invariance(spark, tmp_path, small_corpus):
-    """F19: forcing every doc through the salted path yields byte-identical output."""
-    path = make_input(spark, tmp_path, small_corpus)
+    """F19: forcing every doc through the salted path yields byte-identical output,
+    including when the salt spreads each doc over at least as many chunks as it
+    has spans, so the chunks hold single pages of it."""
+    docs = pd.concat([small_corpus, ROUTING_DOCS], ignore_index=True)
+    path = make_input(spark, tmp_path, docs)
     src = spark.read.parquet(path)
     unsalted = collect_spans(extract_corpus(src, salt_threshold=10**9))
+    assert unsalted["R01"][-1][0] == "text" and unsalted["R02"][0][0] == "text"
+    assert unsalted["R03"] == [("error", "[Error processing doc R03]", None, 0)]
     fully_salted = collect_spans(extract_corpus(src, salt_threshold=0, salted_parallelism=7))
     assert fully_salted == unsalted
+    widest = int(docs["spans"].str.len().max())
+    page_chunks = collect_spans(
+        extract_corpus(src, salt_threshold=0, salted_parallelism=widest)
+    )
+    assert page_chunks == unsalted
     mixed = collect_spans(extract_corpus(src, salt_threshold=6))
     assert mixed == unsalted
 
@@ -116,6 +156,42 @@ def test_idempotent_resume(spark, tmp_path, small_corpus):
     assert len(a) == len(small_corpus)  # no dupes, no missing
     n_rows = spark.read.parquet(out_a).count()
     assert n_rows == len(small_corpus)
+
+
+def test_empty_partitions_complete_in_one_call(spark, tmp_path, small_corpus):
+    """Pending partitions come from range(P) minus the checkpoint rows, not from
+    the docs: with fewer docs than partitions one call completes all of them,
+    the empty ones with zero-count rows. process_only ids outside the range are
+    ignored."""
+    path = make_input(spark, tmp_path, small_corpus.head(3), name="tiny")
+    kw = dict(run_id=f"r-{uuid.uuid4().hex[:8]}", input_path=path,
+              output_path=str(tmp_path / "out_t"), checkpoint_path=str(tmp_path / "cp_t"),
+              num_partitions=16)
+    s0 = run_extraction(spark, **kw, process_only=[16, 99])
+    assert (s0.partitions_pending, s0.partitions_done) == (0, 0)
+    s = run_extraction(spark, **kw)
+    assert (s.partitions_pending, s.partitions_done, s.docs_done) == (16, 16, 3)
+    cp = spark.read.parquet(kw["checkpoint_path"]).toPandas()
+    assert sorted(cp["partition_id"]) == list(range(16))
+    assert (cp["status"] == "completed").all() and cp["docs_done"].sum() == 3
+    empty = cp[cp["docs_done"] == 0]
+    assert len(empty) >= 13
+    assert (empty[["spans_emitted", "parse_failures", "bytes_processed"]] == 0).all().all()
+    s2 = run_extraction(spark, **kw)
+    assert (s2.partitions_pending, s2.partitions_done, s2.docs_done) == (0, 16, 0)
+
+
+def test_no_op_call_does_not_read_input(spark, tmp_path, small_corpus):
+    """A call with nothing pending is planned from the checkpoint table alone:
+    it succeeds even when the input is gone."""
+    path = make_input(spark, tmp_path, small_corpus.head(20), name="noop_in")
+    kw = dict(run_id=f"r-{uuid.uuid4().hex[:8]}", input_path=path,
+              output_path=str(tmp_path / "out_n"), checkpoint_path=str(tmp_path / "cp_n"),
+              num_partitions=8)
+    assert run_extraction(spark, **kw).docs_done == 20
+    os.rename(path, path + "_moved")
+    s = run_extraction(spark, **kw)
+    assert (s.partitions_pending, s.partitions_done, s.docs_done) == (0, 8, 0)
 
 
 def test_rerun_overwrites_partial_partition(spark, tmp_path, small_corpus):
