@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .pipeline import DEFAULT_SALT_THRESHOLD, extract_corpus
+from .pipeline import DEFAULT_SALT_THRESHOLD, extract_corpus, extraction_sums
 from .schema import CHECKPOINT_SCHEMA
 
 DEFAULT_NUM_PARTITIONS = 64
@@ -204,15 +204,7 @@ def run_extraction(
     written = _read_table(spark, output_path, extracted.schema).filter(
         F.col("partition_id").isin(pending_parts)
     )
-    metrics = {
-        r[0]: tuple(r[1:])
-        for r in written.groupBy("partition_id").agg(
-            F.count("*"),
-            F.sum("n_spans"),
-            F.sum(F.col("parse_failed").cast("long")),
-            F.sum("bytes_in"),
-        ).collect()
-    }
+    metrics = {r[0]: r[1:] for r in extraction_sums(written, "partition_id")}
     # rows in CHECKPOINT_SCHEMA field order; a pending partition with zero input
     # docs still completes (zero counts) so resume will not retry it forever
     now = datetime.now()
@@ -220,7 +212,7 @@ def run_extraction(
             for p in pending_parts]
     _append_checkpoint(spark.createDataFrame(rows, CHECKPOINT_SCHEMA), checkpoint_path)
 
-    docs, spans, fails, nbytes = (int(sum(r[i] or 0 for r in rows)) for i in (3, 4, 5, 6))
+    docs, spans, fails, nbytes = (sum(r[i] for r in rows) for i in (3, 4, 5, 6))
     return RunSummary(
         run_id=run_id,
         partitions_total=num_partitions,

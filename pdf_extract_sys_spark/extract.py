@@ -4,6 +4,12 @@ This module is the ONLY Python that runs on the hot path, invoked from
 ``pipeline.py`` via ``mapInArrow``, over whole docs (zero shuffle) or over salted
 mega-doc chunks. Everything inside is vectorized pandas over Arrow batches.
 
+Doc codes: every step keys a doc by an integer code ``doc`` in
+``range(len(all_doc_ids))``, never by the ``doc_id`` string. On the normal path
+the code is the doc's row in its Arrow batch, so two rows sharing a ``doc_id``
+are two independent docs; the chunk path factorizes its ``doc_id`` column once.
+The string only comes back in sentinel text and in the output batch.
+
 Routing semantics (reference: ``backend/app/main.py:171-205``):
   * a doc is *searchable* iff ANY of its pdf_chars pages has stripped text length
     > 50 (``main.py:57-66``) → native-text rules apply to its pdf_chars pages and
@@ -13,14 +19,16 @@ Routing semantics (reference: ``backend/app/main.py:171-205``):
   * html and media spans are always processed, independent of the classifier.
 
 Sentinel totality (``main.py:361-372, 642-646, 731-735``): any doc whose payload
-fails to decode — or that hits an unexpected kernel exception (isolated by a
-per-doc fallback retry) — emits exactly one
+fails to decode — or that hits an unexpected kernel exception (isolated by
+bisecting the batch's doc codes, about 2·log2(docs) re-runs per poison doc) —
+emits exactly one
 ``(kind='error', text='[Error processing doc <doc_id>]', media_ref=NULL, offset=0)``
 span and counts as a parse failure; the job never aborts.
 
 Reading order (``main.py:288, 382, 389-391`` — explicit here, SURVEY.md §2 O7):
-output spans are ordered by (input span offset, within-payload sequence) and the
-final ``offset`` is the 0-based enumeration of that order per doc.
+output spans are ordered by (input span offset, position in the doc's input
+array, within-payload sequence) and the final ``offset`` is the 0-based
+enumeration of that order per doc.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from .kernels import html as html_k
 from .kernels import ocr as ocr_k
@@ -52,19 +61,61 @@ from .schema import (
 
 SEARCHABLE_THRESHOLD = 50  # main.py:64
 
-_OUT_COLS = ["doc_id", "out_offset", "kind", "text", "media_ref"]
+_ROW_COLS = ["doc", "in_off", "pos", "seq", "kind", "text", "media_ref"]
 
 
-def _empty_out() -> pd.DataFrame:
+def _pages(rows: pd.DataFrame) -> pd.DataFrame:
+    """Kernel input frame: the doc code is the kernels' opaque doc_id."""
     return pd.DataFrame(
         {
-            "doc_id": pd.Series(dtype=object),
-            "out_offset": pd.Series(dtype=np.int32),
-            "kind": pd.Series(dtype=object),
-            "text": pd.Series(dtype=object),
-            "media_ref": pd.Series(dtype=object),
+            "doc_id": rows["doc"].to_numpy(),
+            "page": rows["offset"].to_numpy(),
+            "pos": rows["pos"].to_numpy(),
+            "payload": rows["text"].to_numpy(),
         }
     )
+
+
+def _rows(*cols) -> pd.DataFrame:
+    """Output rows from one value per ``_ROW_COLS`` column: arrays, Series
+    (taken by position) or scalars."""
+    return pd.DataFrame(
+        {c: v.to_numpy() if isinstance(v, pd.Series) else v for c, v in zip(_ROW_COLS, cols)}
+    )
+
+
+def _assemble(
+    parts: list[pd.DataFrame],
+    failed: np.ndarray,
+    bytes_in: np.ndarray,
+    all_doc_ids: np.ndarray,
+    enumerate_offsets: bool,
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Drop failed docs' rows, add one sentinel per failed doc, order every doc's
+    rows by (in_off, pos, seq) and build the metrics aligned with all_doc_ids."""
+    codes = np.flatnonzero(failed)
+    sentinels = _rows(codes, -1, -1, 0, KIND_ERROR,
+                      [f"[Error processing doc {d}]" for d in all_doc_ids[codes]], None)
+    rows = pd.concat([p.loc[~failed[p["doc"].to_numpy()]] for p in parts] + [sentinels],
+                     ignore_index=True)
+    doc = rows["doc"].to_numpy(np.int64)
+    order = np.lexsort((rows["seq"].to_numpy(), rows["pos"].to_numpy(),
+                        rows["in_off"].to_numpy(), doc))
+    rows = rows.iloc[order].reset_index(drop=True)
+    doc = doc[order]
+    if enumerate_offsets:
+        rows["out_offset"] = (grouped_cumsum(np.ones(len(doc), np.int64), doc) - 1).astype(np.int32)
+        out = rows[["doc", "out_offset", "kind", "text", "media_ref"]]
+    else:
+        out = rows[_ROW_COLS]
+    metrics = pd.DataFrame(
+        {
+            "n_spans": np.bincount(doc, minlength=len(all_doc_ids)),
+            "parse_failed": failed,
+            "bytes_in": bytes_in,
+        }
+    )
+    return out, metrics
 
 
 def extract_docs(
@@ -75,280 +126,104 @@ def extract_docs(
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Core vectorized extraction over exploded input spans.
 
-    span_rows: columns (doc_id, kind, text, media_ref, offset) — one row per input
-    span — plus optionally:
-      * ``pos``   — the span's index within the doc's input array (deterministic
-        tie-break for duplicate offsets; defaults to the row order per doc)
-      * ``route`` — doc-level routing override for the salted mega-doc path
-        ('text' | 'ocr' | None): a chunk cannot see the sibling pages that decide
-        the searchable classifier, so the pipeline pre-computes it (SURVEY.md §2 S5)
-    all_doc_ids: every doc in the batch (docs with zero input spans included).
-    With enumerate_offsets=False, returns rows keyed (doc_id, in_off, pos, seq)
+    span_rows: one row per input span with columns
+      * ``doc`` — int64 doc code, an index into ``all_doc_ids``;
+      * ``kind``, ``text``, ``media_ref``, ``offset`` — the input span;
+      * ``pos`` — the span's index within its doc's input array (tie-break
+        for duplicate offsets);
+      * ``text_bytes`` — utf-8 byte length of ``text`` (0 for NULL);
+      * optionally ``route`` — doc-level routing override for the salted
+        mega-doc path ('text' | 'ocr' | None): a chunk cannot see the sibling
+        pages that decide the searchable classifier, so the pipeline
+        pre-computes it (SURVEY.md §2 S5).
+    all_doc_ids: the doc_id of every code (docs with zero input spans included).
+    With enumerate_offsets=False, returns rows keyed (doc, in_off, pos, seq)
     WITHOUT final per-doc offset enumeration (sentinels get in_off=-1) — the salted
     path enumerates after reassembling all chunks of a doc.
-    Returns (out_spans, metrics[doc_id, n_spans, parse_failed, bytes_in]).
+    Returns (out_spans, metrics) — out_spans sorted by doc then reading order,
+    metrics columns (n_spans, parse_failed, bytes_in) row-aligned with all_doc_ids.
     May raise — callers go through :func:`extract_docs_safe`.
     """
     sr = span_rows.reset_index(drop=True)
-    if "pos" not in sr.columns:
-        sr["pos"] = sr.groupby("doc_id", sort=False).cumcount()
-    # lineage metric: bytes of input payload text per doc (utf-8). The Arrow layer
-    # provides byte lengths zero-copy (`text_bytes`); the pandas path re-encodes.
-    if "text_bytes" in sr.columns:
-        tb = sr["text_bytes"].astype(np.int64)
-    else:
-        tb = (
-            sr["text"].str.encode("utf-8").str.len()
-            .astype("float64").fillna(0).astype(np.int64)
-        )
-    bytes_in = (
-        pd.DataFrame({"doc_id": sr["doc_id"], "b": tb})
-        .groupby("doc_id", sort=False)["b"]
-        .sum()
-    )
+    n_docs = len(all_doc_ids)
+    doc = sr["doc"].to_numpy(np.int64)
+    # float64 weights sum exactly: an Arrow string column holds < 2^31 bytes
+    bytes_in = np.bincount(doc, weights=sr["text_bytes"].to_numpy(np.int64),
+                           minlength=n_docs).astype(np.int64)
 
-    failed: set = set()
-    kind = sr["kind"].astype(object)
-    known = kind.isin(INPUT_KINDS).to_numpy()
-    failed.update(sr.loc[~known, "doc_id"].unique())
-    needs_text = kind.isin([KIND_PDF_CHARS, KIND_OCR_WORDS, KIND_HTML]).to_numpy()
-    failed.update(sr.loc[needs_text & sr["text"].isna().to_numpy(), "doc_id"].unique())
-    failed.update(
-        sr.loc[
-            kind.isin([KIND_MEDIA, KIND_NEEDS_OCR]).to_numpy()
-            & sr["media_ref"].isna().to_numpy(),
-            "doc_id",
-        ].unique()
-    )
+    kind = sr["kind"]
+    bad_row = ~kind.isin(INPUT_KINDS).to_numpy()
+    bad_row |= (kind.isin([KIND_PDF_CHARS, KIND_OCR_WORDS, KIND_HTML]).to_numpy()
+                & sr["text"].isna().to_numpy())
+    bad_row |= (kind.isin([KIND_MEDIA, KIND_NEEDS_OCR]).to_numpy()
+                & sr["media_ref"].isna().to_numpy())
+    failed = np.zeros(n_docs, dtype=bool)
+    failed[doc[bad_row]] = True
 
-    def ok_rows(k: str) -> pd.DataFrame:
-        m = (kind == k).to_numpy() & ~sr["doc_id"].isin(failed).to_numpy()
-        return sr.loc[m]
+    def ok_rows(kinds: list[str], mask: bool | np.ndarray = True) -> pd.DataFrame:
+        return sr.loc[kind.isin(kinds).to_numpy() & ~failed[doc] & mask]
 
-    def attach_pos(spans: pd.DataFrame, pages: pd.DataFrame) -> pd.DataFrame:
-        """Carry the input-array position onto kernel outputs (tie-break key)."""
-        key = pages.drop_duplicates(["doc_id", "page"])[["doc_id", "page", "pos"]]
-        return spans.merge(key, on=["doc_id", "page"], how="left")
+    def fail(bad_codes: pd.Index) -> None:
+        failed[np.asarray(bad_codes, dtype=np.int64)] = True
 
     # --- pdf_chars: decode + searchable classification (numpy core) -------------
-    pdf_rows = ok_rows(KIND_PDF_CHARS)
-    pdf_pages = pdf_rows.rename(columns={"offset": "page", "text": "payload"})[
-        ["doc_id", "page", "pos", "payload"]
-    ]
-    pdf_ev, bad_pdf = pdf_k.decode_pdf_core(pdf_pages)
-    failed.update(bad_pdf)  # decode already dropped bad docs' events
+    pdf_ev, bad = pdf_k.decode_pdf_core(_pages(ok_rows([KIND_PDF_CHARS])))
+    fail(bad)  # decode already dropped bad docs' events
 
     plens = pdf_k.page_stripped_lengths_core(pdf_ev)
-    tab_docs = pdf_ev.page_tab["doc_id"].to_numpy()
-    searchable_docs = set(tab_docs[plens > SEARCHABLE_THRESHOLD])
+    page_doc = pdf_ev.page_tab["doc_id"].to_numpy(np.int64)
+    searchable = np.zeros(n_docs, dtype=bool)
+    searchable[page_doc[plens > SEARCHABLE_THRESHOLD]] = True
     # mega-doc chunk path: the pipeline pre-computed doc-level routing (a chunk
     # cannot see sibling pages) — apply the override
     if "route" in sr.columns:
-        rt = sr.dropna(subset=["route"]).drop_duplicates("doc_id")
-        searchable_docs |= set(rt.loc[rt["route"] == "text", "doc_id"])
-        searchable_docs -= set(rt.loc[rt["route"] == "ocr", "doc_id"])
-
-    page_sel = pdf_ev.page_tab["doc_id"].isin(searchable_docs).to_numpy()
-    pdf_spans = pdf_k.segment_sentences_core(pdf_ev.select_pages(page_sel))
+        route = sr["route"].to_numpy(dtype=object)
+        searchable[doc[route == "text"]] = True
+        searchable[doc[route == "ocr"]] = False
+    pdf_spans = pdf_k.segment_sentences_core(pdf_ev.select_pages(searchable[page_doc]))
 
     # --- ocr_words: only for docs NOT routed to the native-text path -----------
-    # calls the pyarrow/numpy cores directly (the pandas compat wrappers exist for
-    # tests only): no object-dtype round-trip, and page identity stays PER INPUT
-    # SPAN (two ocr_words spans sharing one offset keep distinct page_tab rows,
-    # matching the oracle's per-span treatment — the wrapper's re-factorize on
-    # (doc_id, page) would merge them)
-    ocr_rows = ok_rows(KIND_OCR_WORDS)
-    ocr_rows = ocr_rows.loc[~ocr_rows["doc_id"].isin(searchable_docs)]
-    ocr_pages = ocr_rows.rename(columns={"offset": "page", "text": "payload"})[
-        ["doc_id", "page", "pos", "payload"]
-    ]
-    ocr_ev, bad_ocr = ocr_k.decode_ocr_core(ocr_pages)
-    failed.update(bad_ocr)  # core already dropped bad docs' events
+    # page identity stays PER INPUT SPAN: two ocr_words spans sharing one offset
+    # keep distinct page_tab rows, matching the oracle's per-span treatment
+    ocr_ev, bad = ocr_k.decode_ocr_core(_pages(ok_rows([KIND_OCR_WORDS], ~searchable[doc])))
+    fail(bad)  # core already dropped bad docs' events
     ocr_spans = ocr_k.group_ocr_lines_core(ocr_ev)
 
-    # --- html -------------------------------------------------------------------
-    html_rows = ok_rows(KIND_HTML)
-    html_docs = html_rows.rename(columns={"offset": "page", "text": "payload"})[
-        ["doc_id", "page", "payload", "pos"]
-    ]
-    html_spans = html_k.extract_html_spans(html_docs[["doc_id", "page", "payload"]])
-    html_spans = attach_pos(html_spans, html_docs)
+    # --- html: keyed per input span (its row here), so two html spans sharing
+    # an offset come out payload by payload, as in the oracle ---------------------
+    html_rows = ok_rows([KIND_HTML])
+    html_spans = html_k.extract_html_spans(
+        _pages(html_rows).assign(doc_id=np.arange(len(html_rows)))
+    )
+    row = html_spans["doc_id"].to_numpy(np.int64)
 
-    # --- media passthrough (FIXTURES.md kind #4 / F17) ---------------------------
-    media_rows = ok_rows(KIND_MEDIA)
-
-    # --- needs_ocr passthrough (r3 VERDICT #6): image-only PDF pages surface
-    # as an explicit OCR work-list row instead of silently zero spans;
-    # independent of the searchable classifier (like media/html) -----------------
-    ocr_todo_rows = ok_rows(KIND_NEEDS_OCR)
-
-    # --- page_error passthrough (r4 VERDICT #3): a page-scoped decode failure
+    # --- passthrough kinds, independent of the classifier (like html):
+    # media (FIXTURES.md kind #4 / F17); needs_ocr (r3 VERDICT #6): image-only
+    # PDF pages surface as an explicit OCR work-list row instead of silently
+    # zero spans; page_error (r4 VERDICT #3): a page-scoped decode failure
     # becomes the reference's '[Error processing page N]' span (main.py:361-372)
     # — the doc's other pages keep extracting; only doc-level failures sentinel
-    page_err_rows = ok_rows(KIND_PAGE_ERROR)
+    pt = ok_rows([KIND_MEDIA, KIND_NEEDS_OCR, KIND_PAGE_ERROR])
+    pt_kind = pt["kind"].to_numpy(dtype=object)
+    page_err = pt_kind == KIND_PAGE_ERROR
+    pt_text = np.where(pt_kind == KIND_MEDIA, pt["text"].to_numpy(dtype=object), None)
+    # reference format, 0-based page index (main.py:59,369)
+    pt_text[page_err] = (
+        "[Error processing page " + pt["offset"][page_err].astype(str) + "]"
+    ).to_numpy()
 
-    # --- assemble reading order ---------------------------------------------------
-    parts = []
-    if len(pdf_spans):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": pdf_spans["doc_id"],
-                    "in_off": pdf_spans["page"].astype(np.int64),
-                    "pos": pdf_spans["pos"].astype(np.int64),
-                    "seq": pdf_spans["seq"],
-                    "kind": KIND_TEXT,
-                    "text": pdf_spans["text"],
-                    "media_ref": None,
-                }
-            )
-        )
-    if len(ocr_spans):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": ocr_spans["doc_id"],
-                    "in_off": ocr_spans["page"].astype(np.int64),
-                    "pos": ocr_spans["pos"].astype(np.int64),
-                    "seq": ocr_spans["seq"],
-                    "kind": KIND_TEXT,
-                    "text": ocr_spans["text"],
-                    "media_ref": None,
-                }
-            )
-        )
-    if len(html_spans):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": html_spans["doc_id"],
-                    "in_off": html_spans["page"].astype(np.int64),
-                    "pos": html_spans["pos"].astype(np.int64),
-                    "seq": html_spans["seq"],
-                    "kind": html_spans["kind"],
-                    "text": html_spans["text"],
-                    "media_ref": html_spans["media_ref"],
-                }
-            )
-        )
-    if len(media_rows):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": media_rows["doc_id"],
-                    "in_off": media_rows["offset"].astype(np.int64),
-                    "pos": media_rows["pos"].astype(np.int64),
-                    "seq": 0,
-                    "kind": KIND_MEDIA,
-                    "text": media_rows["text"],
-                    "media_ref": media_rows["media_ref"],
-                }
-            )
-        )
-    if len(ocr_todo_rows):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": ocr_todo_rows["doc_id"],
-                    "in_off": ocr_todo_rows["offset"].astype(np.int64),
-                    "pos": ocr_todo_rows["pos"].astype(np.int64),
-                    "seq": 0,
-                    "kind": KIND_NEEDS_OCR,
-                    "text": None,
-                    "media_ref": ocr_todo_rows["media_ref"],
-                }
-            )
-        )
-    if len(page_err_rows):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": page_err_rows["doc_id"],
-                    "in_off": page_err_rows["offset"].astype(np.int64),
-                    "pos": page_err_rows["pos"].astype(np.int64),
-                    "seq": 0,
-                    "kind": KIND_ERROR,
-                    # reference format, 0-based page index (main.py:59,369)
-                    "text": "[Error processing page "
-                    + page_err_rows["offset"].astype(np.int64).astype(str)
-                    + "]",
-                    "media_ref": page_err_rows["media_ref"],
-                }
-            )
-        )
-
-    if parts:
-        allp = pd.concat(parts, ignore_index=True)
-        allp = allp.loc[~allp["doc_id"].isin(failed)]
-        idx = pd.Index(pd.Series(all_doc_ids, dtype=object))
-        codes = (
-            idx.get_indexer(allp["doc_id"].to_numpy(dtype=object))
-            if idx.is_unique
-            else None
-        )
-        # -1 codes (span doc_ids outside all_doc_ids — impossible from the
-        # internal callers, but this is a public function) would collapse
-        # into ONE group; keep the exact per-doc_id numbering path for them
-        if codes is not None and (len(codes) == 0 or codes.min() >= 0):
-            # out_offset only needs per-doc grouping + within-doc
-            # (in_off, pos, seq) order, so an integer doc code replaces the
-            # object-string sort key — value-identical, no string compares
-            order = np.lexsort(
-                (
-                    allp["seq"].to_numpy(),
-                    allp["pos"].to_numpy(),
-                    allp["in_off"].to_numpy(),
-                    codes,
-                )
-            )
-            allp = allp.iloc[order].reset_index(drop=True)
-            allp["out_offset"] = (
-                grouped_cumsum(np.ones(len(allp), np.int64), codes[order]) - 1
-            ).astype(np.int32)
-        else:
-            allp = allp.sort_values(
-                ["doc_id", "in_off", "pos", "seq"], kind="stable"
-            ).reset_index(drop=True)
-            allp["out_offset"] = (
-                allp.groupby("doc_id", sort=False).cumcount().astype(np.int32)
-            )
-    else:
-        allp = _empty_out().assign(in_off=np.int64(0), pos=np.int64(0), seq=np.int64(0))
-
-    # --- error sentinels ----------------------------------------------------------
-    if failed:
-        fids = pd.Series(sorted(failed), dtype=object)
-        sent = pd.DataFrame(
-            {
-                "doc_id": fids,
-                "in_off": np.int64(-1),
-                "pos": np.int64(-1),
-                "seq": np.int64(0),
-                "out_offset": np.int32(0),
-                "kind": KIND_ERROR,
-                "text": "[Error processing doc " + fids + "]",
-                "media_ref": None,
-            }
-        )
-        allp = pd.concat([allp, sent], ignore_index=True)
-
-    if enumerate_offsets:
-        out = allp[["doc_id", "out_offset", "kind", "text", "media_ref"]]
-    else:
-        out = allp[["doc_id", "in_off", "pos", "seq", "kind", "text", "media_ref"]]
-
-    # --- per-doc metrics ------------------------------------------------------------
-    ids = pd.Series(all_doc_ids, dtype=object)
-    nsp = out.groupby("doc_id", sort=False).size()
-    metrics = pd.DataFrame(
-        {
-            "doc_id": ids,
-            "n_spans": nsp.reindex(ids).fillna(0).astype(np.int64).to_numpy(),
-            "parse_failed": ids.isin(failed).to_numpy(),
-            "bytes_in": bytes_in.reindex(ids).fillna(0).astype(np.int64).to_numpy(),
-        }
-    )
-    return out, metrics
+    parts = [
+        _rows(s["doc_id"], s["page"], s["pos"], s["seq"], KIND_TEXT, s["text"], None)
+        for s in (pdf_spans, ocr_spans)
+    ] + [
+        _rows(html_rows["doc"].to_numpy()[row], html_spans["page"],
+              html_rows["pos"].to_numpy()[row], html_spans["seq"], html_spans["kind"],
+              html_spans["text"], html_spans["media_ref"]),
+        _rows(pt["doc"], pt["offset"], pt["pos"], 0, np.where(page_err, KIND_ERROR, pt_kind),
+              pt_text, pt["media_ref"]),
+    ]
+    return _assemble([p for p in parts if len(p)], failed, bytes_in, all_doc_ids,
+                     enumerate_offsets)
 
 
 def extract_docs_safe(
@@ -357,52 +232,30 @@ def extract_docs_safe(
     *,
     enumerate_offsets: bool = True,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Sentinel-totality wrapper: on an unexpected kernel exception, retry per doc to
-    isolate the poison docs (cold path) — the batch never fails (main.py:361-372)."""
+    """Sentinel-totality wrapper (main.py:361-372) — the batch never fails. On an
+    unexpected kernel exception it bisects the doc codes: each half re-runs on
+    its own (codes ``< mid``, then ``>= mid`` shifted down by ``mid``) until the
+    raising docs stand alone and become sentinels (cold path; one poison doc
+    costs about 2·log2(docs) re-runs)."""
     try:
         return extract_docs(span_rows, all_doc_ids, enumerate_offsets=enumerate_offsets)
     except Exception:
-        outs, mets = [], []
-        for did in all_doc_ids:
-            rows = span_rows.loc[span_rows["doc_id"] == did]
-            try:
-                o, m = extract_docs(
-                    rows, np.array([did], dtype=object), enumerate_offsets=enumerate_offsets
-                )
-            except Exception:
-                o = pd.DataFrame(
-                    {
-                        "doc_id": [did],
-                        "in_off": np.array([-1], dtype=np.int64),
-                        "pos": np.array([-1], dtype=np.int64),
-                        "seq": np.array([0], dtype=np.int64),
-                        "out_offset": np.array([0], dtype=np.int32),
-                        "kind": [KIND_ERROR],
-                        "text": [f"[Error processing doc {did}]"],
-                        "media_ref": [None],
-                    }
-                )
-                o = (
-                    o[["doc_id", "out_offset", "kind", "text", "media_ref"]]
-                    if enumerate_offsets
-                    else o[["doc_id", "in_off", "pos", "seq", "kind", "text", "media_ref"]]
-                )
-                m = pd.DataFrame(
-                    {
-                        "doc_id": [did],
-                        "n_spans": np.array([1], dtype=np.int64),
-                        "parse_failed": [True],
-                        "bytes_in": np.array([0], dtype=np.int64),
-                    }
-                )
-            outs.append(o)
-            mets.append(m)
-        return (
-            pd.concat(outs, ignore_index=True) if outs else _empty_out(),
-            pd.concat(mets, ignore_index=True)
-            if mets
-            else pd.DataFrame(columns=["doc_id", "n_spans", "parse_failed", "bytes_in"]),
+        n = len(all_doc_ids)
+        if n == 0:
+            raise
+        if n == 1:
+            return _assemble([], np.ones(1, dtype=bool), np.zeros(1, np.int64),
+                             all_doc_ids, enumerate_offsets)
+        mid = n // 2
+        doc = span_rows["doc"].to_numpy()
+        lo_out, lo_met = extract_docs_safe(span_rows.loc[doc < mid], all_doc_ids[:mid],
+                                           enumerate_offsets=enumerate_offsets)
+        hi_out, hi_met = extract_docs_safe(
+            span_rows.loc[doc >= mid].assign(doc=doc[doc >= mid] - mid), all_doc_ids[mid:],
+            enumerate_offsets=enumerate_offsets,
         )
+        return (pd.concat([lo_out, hi_out.assign(doc=hi_out["doc"] + mid)], ignore_index=True),
+                pd.concat([lo_met, hi_met], ignore_index=True))
 
 
 # ---------------------------------------------------------------------------------
@@ -410,31 +263,35 @@ def extract_docs_safe(
 # ---------------------------------------------------------------------------------
 
 
-def _record_batch_to_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, pd.DataFrame]:
-    """Flatten (doc_id, spans list<struct>) Arrow batch to exploded pandas span rows
-    using Arrow list offsets — vectorized, no Python per row."""
-    import pyarrow.compute as pc
+def _explode_spans(spans: pa.ListArray) -> tuple[np.ndarray, np.ndarray, dict[str, pa.Array]]:
+    """Flatten a ``list<struct>`` spans column with its list offsets. Returns
+    each span's doc code (its row in the batch), its pos (index within that
+    row's list) and the span fields by name; StructArray.flatten folds a NULL
+    span's validity into every field."""
+    offs = spans.offsets.to_numpy()
+    counts = np.diff(offs)
+    doc = np.repeat(np.arange(len(spans), dtype=np.int64), counts)
+    pos = np.arange(len(doc), dtype=np.int64) - np.repeat(offs[:-1] - offs[0], counts)
+    flat = spans.values.slice(offs[0], offs[-1] - offs[0])
+    return doc, pos, dict(zip((f.name for f in flat.type), flat.flatten()))
 
-    doc_ids = batch.column("doc_id").to_pandas().to_numpy(dtype=object)
-    spans = batch.column("spans")
-    parent = pc.list_parent_indices(spans).to_numpy(zero_copy_only=False)
-    flat = pc.list_flatten(spans)
-    # pos = index within the doc's input array (flat rows are parent-ordered)
-    counts = np.bincount(parent, minlength=len(doc_ids)) if len(parent) else np.zeros(len(doc_ids), np.int64)
-    starts = np.zeros(len(doc_ids), dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:]) if len(doc_ids) > 1 else None
-    pos = np.arange(len(parent), dtype=np.int64) - starts[parent] if len(parent) else np.empty(0, np.int64)
-    text_arr = flat.field("text")
+
+def _record_batch_to_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, pd.DataFrame]:
+    """Flatten a (doc_id, spans list<struct>) Arrow batch to exploded pandas span
+    rows (the :func:`extract_docs` input) using Arrow list offsets — vectorized,
+    no Python per row. Returns (doc_id per code, span rows)."""
+    doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
+    doc, pos, f = _explode_spans(batch.column("spans"))
     span_rows = pd.DataFrame(
         {
-            "doc_id": doc_ids[parent],
-            "kind": flat.field("kind").to_pandas().to_numpy(dtype=object),
-            "text": text_arr.to_pandas().to_numpy(dtype=object),
-            "media_ref": flat.field("media_ref").to_pandas().to_numpy(dtype=object),
-            "offset": flat.field("offset").to_pandas().to_numpy(np.int64),
+            "doc": doc,
+            "kind": f["kind"].to_numpy(zero_copy_only=False),
+            "text": f["text"].to_numpy(zero_copy_only=False),
+            "media_ref": f["media_ref"].to_numpy(zero_copy_only=False),
+            "offset": pc.fill_null(f["offset"], 0).to_numpy().astype(np.int64),
             "pos": pos,
             # utf-8 byte length straight off the Arrow buffer (no re-encode)
-            "text_bytes": pc.fill_null(pc.binary_length(text_arr), 0).to_numpy(
+            "text_bytes": pc.fill_null(pc.binary_length(f["text"]), 0).to_numpy(
                 zero_copy_only=False
             ),
         }
@@ -445,34 +302,14 @@ def _record_batch_to_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, pd.DataFra
 def _rows_to_record_batch(
     doc_ids: np.ndarray, out: pd.DataFrame, metrics: pd.DataFrame
 ) -> pa.RecordBatch:
-    """Reassemble output span rows into the EXTRACTED_ARROW batch, preserving the
-    input doc order and emitting an empty spans array for spanless docs."""
-    idx = pd.Index(doc_ids)
-    if idx.is_unique:
-        # hash-map doc position + integer lexsort instead of an object-key
-        # merge + sort_values — same rows, same order (out_offset is unique
-        # per doc, so the sort is deterministic)
-        pos = idx.get_indexer(out["doc_id"].to_numpy(dtype=object))
-        if (pos < 0).any():  # inner-merge semantics: drop unknown doc rows
-            m = pos >= 0
-            out = out.loc[m]
-            pos = pos[m]
-        order = np.lexsort((out["out_offset"].to_numpy(), pos))
-        o = out.iloc[order]
-        pos = pos[order]
-        counts = np.bincount(pos, minlength=len(doc_ids))
-    else:
-        order_df = pd.DataFrame({"doc_id": doc_ids, "_doc_pos": np.arange(len(doc_ids))})
-        o = out.merge(order_df, on="doc_id", how="inner")
-        o = o.sort_values(["_doc_pos", "out_offset"], kind="stable")
-        counts = (
-            o.groupby("_doc_pos", sort=True)
-            .size()
-            .reindex(range(len(doc_ids)), fill_value=0)
-            .to_numpy()
-        )
+    """Reassemble output span rows (keyed by doc code) into the EXTRACTED_ARROW
+    batch in input doc order, with an empty spans array for spanless docs;
+    ``metrics`` is row-aligned with ``doc_ids``."""
+    doc = out["doc"].to_numpy()
+    order = np.lexsort((out["out_offset"].to_numpy(), doc))
+    o = out.iloc[order]
     offsets = np.zeros(len(doc_ids) + 1, dtype=np.int32)
-    np.cumsum(counts, out=offsets[1:])
+    np.cumsum(np.bincount(doc, minlength=len(doc_ids)), out=offsets[1:])
 
     struct = pa.StructArray.from_arrays(
         [
@@ -488,14 +325,13 @@ def _rows_to_record_batch(
     )
     spans_arr = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), struct)
 
-    m = metrics.set_index("doc_id").reindex(pd.Index(doc_ids))
     return pa.RecordBatch.from_arrays(
         [
             pa.array(doc_ids, type=pa.string()),
             spans_arr,
-            pa.array(m["n_spans"].fillna(0).to_numpy(np.int64), type=pa.int64()),
-            pa.array(m["parse_failed"].fillna(True).to_numpy(bool), type=pa.bool_()),
-            pa.array(m["bytes_in"].fillna(0).to_numpy(np.int64), type=pa.int64()),
+            pa.array(metrics["n_spans"].to_numpy(np.int64), type=pa.int64()),
+            pa.array(metrics["parse_failed"].to_numpy(bool), type=pa.bool_()),
+            pa.array(metrics["bytes_in"].to_numpy(np.int64), type=pa.int64()),
         ],
         schema=EXTRACTED_ARROW,
     )
@@ -550,55 +386,33 @@ def extract_chunk_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa
     input span, with pre-computed doc routing) in, CHUNK_OUT_ARROW rows out — no
     final offset enumeration (the reassembly groupBy seals offsets). One marker
     row per doc carries the chunk's input byte count so the reassembly needs no
-    extra joins/aggregations."""
+    extra joins/aggregations. Chunk rows are grouped by ``doc_id`` (one code per
+    distinct id): the path's input contract is unique doc ids."""
     from .schema import CHUNK_MARKER_OFF, CHUNK_OUT_ARROW, KIND_CHUNK_MARKER
 
     _prepare_worker()
-    import pyarrow.compute as pc
-
     for batch in batches:
         if batch.num_rows == 0:
             continue
         df = batch.to_pandas()
+        df["doc"], doc_ids = pd.factorize(df["doc_id"])
+        doc_ids = doc_ids.to_numpy(dtype=object)
         df["text_bytes"] = pc.fill_null(
             pc.binary_length(batch.column("text")), 0
         ).to_numpy(zero_copy_only=False)
-        doc_ids = df["doc_id"].unique()
         out, metrics = extract_docs_safe(df, doc_ids, enumerate_offsets=False)
-        out = out.astype({"in_off": np.int64, "pos": np.int64, "seq": np.int64})
-        out["bytes_in"] = np.int64(0)
         markers = pd.DataFrame(
             {
-                "doc_id": metrics["doc_id"],
+                "doc": np.arange(len(doc_ids)),
                 "in_off": np.int64(CHUNK_MARKER_OFF),
                 "pos": np.int64(0),
                 "seq": np.int64(0),
                 "kind": KIND_CHUNK_MARKER,
                 "text": None,
                 "media_ref": None,
-                "bytes_in": metrics["bytes_in"].astype(np.int64),
+                "bytes_in": metrics["bytes_in"].to_numpy(np.int64),
             }
         )
-        out = pd.concat([out, markers], ignore_index=True)
+        out = pd.concat([out.assign(bytes_in=np.int64(0)), markers], ignore_index=True)
+        out.insert(0, "doc_id", doc_ids[out.pop("doc").to_numpy()])
         yield pa.RecordBatch.from_pandas(out, schema=CHUNK_OUT_ARROW, preserve_index=False)
-
-
-def extract_batch_pandas(docs: pd.DataFrame) -> pd.DataFrame:
-    """Test convenience (no production caller):
-    (doc_id, spans: list[dict]) → EXTRACTED_ARROW-shaped pandas frame."""
-    doc_ids = docs["doc_id"].to_numpy(dtype=object)
-    n = docs["spans"].str.len().fillna(0).astype(np.int64).to_numpy()
-    idx = np.repeat(np.arange(len(docs)), n)
-    flat = [s for lst in docs["spans"] for s in (lst if lst is not None else [])]
-    span_rows = pd.DataFrame(
-        {
-            "doc_id": doc_ids[idx],
-            "kind": [s["kind"] for s in flat],
-            "text": [s["text"] for s in flat],
-            "media_ref": [s["media_ref"] for s in flat],
-            "offset": np.array([s["offset"] for s in flat], dtype=np.int64),
-        }
-    )
-    out, metrics = extract_docs_safe(span_rows, doc_ids)
-    rb = _rows_to_record_batch(doc_ids, out, metrics)
-    return rb.to_pandas()

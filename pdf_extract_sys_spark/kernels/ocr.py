@@ -60,11 +60,6 @@ EMPTY_SPANS = pd.DataFrame(
     }
 )
 
-_EV_COLS = [
-    "doc_id", "page", "idx", "word", "conf", "x", "y", "w", "h", "block", "line",
-    "img_w", "img_h",
-]
-
 
 class OcrEvents:
     """Flat columnar word-event stream, page-major (dense int32 `prow` indexing
@@ -269,74 +264,3 @@ def group_ocr_lines_core(ev: OcrEvents) -> pd.DataFrame:
         }
     )
     return out.loc[nonempty].reset_index(drop=True)
-
-
-# ---------------------------------------------------------------------------------
-# DataFrame-compat wrappers
-# ---------------------------------------------------------------------------------
-
-
-def decode_ocr_word_events(pages: pd.DataFrame) -> tuple[pd.DataFrame, pd.Index]:
-    """Compat wrapper: returns the row-level events frame (_EV_COLS)."""
-    if "pos" not in pages.columns:
-        pages = pages.assign(pos=np.arange(len(pages), dtype=np.int64))
-    ev, bad = decode_ocr_core(pages)
-    tab = ev.page_tab
-    idx = grouped_cumsum(np.ones(len(ev), np.int64), ev.prow) - 1
-    df = pd.DataFrame(
-        {
-            "doc_id": tab["doc_id"].to_numpy()[ev.prow],
-            "page": tab["page"].to_numpy()[ev.prow],
-            "idx": idx,
-            "word": ev.words.to_numpy(zero_copy_only=False),
-            "conf": ev.conf,
-            "x": ev.x, "y": ev.y, "w": ev.w, "h": ev.h,
-            "block": ev.block,
-            "line": ev.line,
-            "img_w": tab["img_w"].to_numpy()[ev.prow],
-            "img_h": tab["img_h"].to_numpy()[ev.prow],
-        }
-    ) if len(ev) else pd.DataFrame(columns=_EV_COLS)
-    return df, bad
-
-
-def _events_from_frame(events: pd.DataFrame) -> OcrEvents:
-    e = events.sort_values(["doc_id", "page", "idx"], kind="stable").reset_index(drop=True)
-    key = pd.MultiIndex.from_frame(e[["doc_id", "page"]])
-    codes, uniq = pd.factorize(key)
-    tab = pd.DataFrame(
-        {
-            "doc_id": [u[0] for u in uniq],
-            "page": [u[1] for u in uniq],
-            "pos": np.arange(len(uniq), dtype=np.int64),
-        }
-    )
-    iw = np.full(len(uniq), np.nan)
-    ih = np.full(len(uniq), np.nan)
-    first = np.ones(len(e), dtype=bool)
-    first[1:] = codes[1:] != codes[:-1]
-    iw[codes[first]] = e["img_w"].to_numpy()[first]
-    ih[codes[first]] = e["img_h"].to_numpy()[first]
-    tab["img_w"] = iw
-    tab["img_h"] = ih
-    return OcrEvents(
-        codes.astype(np.int32),
-        pa.array(e["word"].to_numpy(dtype=object), type=pa.string()),
-        e["conf"].to_numpy(np.float64),
-        e["x"].to_numpy(np.float64),
-        e["y"].to_numpy(np.float64),
-        e["w"].to_numpy(np.float64),
-        e["h"].to_numpy(np.float64),
-        e["block"].to_numpy(np.int64),
-        e["line"].to_numpy(np.int64),
-        tab,
-    )
-
-
-def group_ocr_lines(events: pd.DataFrame) -> pd.DataFrame:
-    """Compat wrapper: row-level events frame → span frame."""
-    if not len(events):
-        return EMPTY_SPANS.copy()
-    ev = _events_from_frame(events)
-    spans = group_ocr_lines_core(ev)
-    return spans[["doc_id", "page", "seq", "text", "l", "t", "r", "b"]]

@@ -454,35 +454,6 @@ def segment_sentences_core(ev: PdfEvents) -> pd.DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------------
-# DataFrame-compat wrappers (tests + salted-path helpers)
-# ---------------------------------------------------------------------------------
-
-
-def decode_pdf_char_events(pages: pd.DataFrame) -> tuple[pd.DataFrame, pd.Index]:
-    """Compat wrapper over decode_pdf_core returning the row-level events frame
-    (doc_id, page, idx, char, has_bbox, x0..y1, page_w, page_h)."""
-    if "pos" not in pages.columns:
-        pages = pages.assign(pos=np.arange(len(pages), dtype=np.int64))
-    ev, bad = decode_pdf_core(pages)
-    tab = ev.page_tab
-    idx = grouped_cumsum(np.ones(len(ev), np.int64), ev.prow) - 1
-    chars = np.array(list(_cps_to_str(ev.cp)), dtype="<U1") if len(ev) else np.empty(0, "<U1")
-    df = pd.DataFrame(
-        {
-            "doc_id": tab["doc_id"].to_numpy()[ev.prow],
-            "page": tab["page"].to_numpy()[ev.prow],
-            "idx": idx,
-            "char": chars,
-            "has_bbox": ev.has_bbox,
-            "x0": ev.x0, "y0": ev.y0, "x1": ev.x1, "y1": ev.y1,
-            "page_w": tab["page_w"].to_numpy()[ev.prow],
-            "page_h": tab["page_h"].to_numpy()[ev.prow],
-        }
-    )
-    return df, bad
-
-
 def payload_stripped_lengths(payloads: pd.Series) -> pd.Series:
     """Per-payload ``len(full_text.strip())`` (the searchable-classifier input,
     main.py:62-64); -1 for malformed payloads. Payloads must be strings. The
@@ -502,48 +473,3 @@ def payload_stripped_lengths(payloads: pd.Series) -> pd.Series:
     if len(bad):
         out.loc[list(bad)] = -1
     return out
-
-
-def _events_from_frame(events: pd.DataFrame) -> PdfEvents:
-    """Rebuild a PdfEvents from a row-level frame (test convenience)."""
-    e = events.sort_values(["doc_id", "page", "idx"], kind="stable").reset_index(drop=True)
-    key = pd.MultiIndex.from_frame(e[["doc_id", "page"]])
-    codes, uniq = pd.factorize(key)
-    tab = pd.DataFrame(
-        {
-            "doc_id": [u[0] for u in uniq],
-            "page": [u[1] for u in uniq],
-            "pos": np.arange(len(uniq), dtype=np.int64),
-        }
-    )
-    pw = np.full(len(uniq), np.nan)
-    ph = np.full(len(uniq), np.nan)
-    first = np.ones(len(e), dtype=bool)
-    first[1:] = codes[1:] != codes[:-1]
-    pw[codes[first]] = e["page_w"].to_numpy()[first]
-    ph[codes[first]] = e["page_h"].to_numpy()[first]
-    tab["page_w"] = pw
-    tab["page_h"] = ph
-    cps = np.frombuffer(
-        "".join(e["char"]).encode("utf-32-le"), dtype="<u4"
-    ).astype(np.uint32)
-    return PdfEvents(
-        codes.astype(np.int32),
-        cps,
-        e["has_bbox"].to_numpy(bool),
-        e["x0"].to_numpy(np.float64),
-        e["y0"].to_numpy(np.float64),
-        e["x1"].to_numpy(np.float64),
-        e["y1"].to_numpy(np.float64),
-        tab,
-    )
-
-
-def segment_sentences(events: pd.DataFrame) -> pd.DataFrame:
-    """Compat wrapper: row-level events frame → span frame
-    (doc_id, page, seq, text, l, t, r, b)."""
-    if not len(events):
-        return EMPTY_SPANS.copy()
-    ev = _events_from_frame(events)
-    spans = segment_sentences_core(ev)
-    return spans[["doc_id", "page", "seq", "text", "l", "t", "r", "b"]]

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from .extract import (
     SEARCHABLE_THRESHOLD,
+    _explode_spans,
     _prepare_worker,
     extract_chunk_map_in_arrow,
     extract_map_in_arrow,
@@ -60,19 +61,14 @@ def _route_mega_docs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
     _prepare_worker()
     for batch in batches:
         spans = batch.column("spans")
-        offs = spans.offsets.to_numpy()
-        parent = np.repeat(np.arange(len(spans)), np.diff(offs))
-        # StructArray.flatten folds a NULL span's validity into its fields
-        fields = spans.values.slice(offs[0], offs[-1] - offs[0]).flatten()
-        st = spans.type.value_type
-        kind = fields[st.get_field_index("kind")]
-        text = fields[st.get_field_index("text")]
+        doc, _, f = _explode_spans(spans)
+        kind, text = f["kind"], f["text"]
         # NULL payloads are left out: decode_pdf_core takes strings only
         is_pdf = pc.fill_null(pc.and_(pc.equal(kind, KIND_PDF_CHARS), pc.is_valid(text)), False)
         plens = payload_stripped_lengths(
             pd.Series(pc.filter(text, is_pdf).to_numpy(zero_copy_only=False))
         ).to_numpy()
-        pdf_doc = parent[is_pdf.to_numpy(zero_copy_only=False)]
+        pdf_doc = doc[is_pdf.to_numpy(zero_copy_only=False)]
         searchable = np.zeros(len(spans), dtype=bool)
         searchable[pdf_doc[plens > SEARCHABLE_THRESHOLD]] = True
         route = pa.array(np.where(searchable, "text", "ocr"), pa.string())
@@ -203,6 +199,19 @@ def extract_corpus_direct(corpus: DataFrame) -> DataFrame:
     instead of caching around it). General/unbounded corpora must keep using
     extract_corpus, which salts the skew tail."""
     return corpus.mapInArrow(extract_map_in_arrow, EXTRACTED_SCHEMA)
+
+
+def extraction_sums(extracted: DataFrame, *keys: str) -> list[tuple]:
+    """The one metrics rollup of an EXTRACTED_SCHEMA frame (the checkpointed
+    batch job and the streaming job both use it): per group of ``keys``, the
+    tuple ``(*key values, docs, spans, parse_failures, bytes)``, collected.
+    With no keys it is one tuple over the whole frame, zeros when empty."""
+    return [tuple(r) for r in extracted.groupBy(*keys).agg(
+        F.count("*"),
+        F.coalesce(F.sum("n_spans"), F.lit(0)),
+        F.coalesce(F.sum(F.col("parse_failed").cast("long")), F.lit(0)),
+        F.coalesce(F.sum("bytes_in"), F.lit(0)),
+    ).collect()]
 
 
 def assert_no_per_row_python(df: DataFrame) -> None:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pipeline import DEFAULT_SALT_THRESHOLD, extract_corpus
+from .pipeline import DEFAULT_SALT_THRESHOLD, extract_corpus, extraction_sums
 from .schema import CORPUS_SCHEMA
 
 PROGRESS_SCHEMA = T.StructType(
@@ -82,14 +82,7 @@ def stream_extract(
                 .partitionBy("epoch_id")
                 .parquet(output_path)
             )
-            m = out.agg(
-                F.count("*").alias("docs"),
-                F.coalesce(F.sum("n_spans"), F.lit(0)).alias("spans"),
-                F.coalesce(F.sum(F.col("parse_failed").cast("long")), F.lit(0)).alias("fails"),
-                F.coalesce(F.sum("bytes_in"), F.lit(0)).alias("bytes"),
-            ).collect()[0]
-            row = [(int(epoch_id), m["docs"], int(m["spans"]), int(m["fails"]),
-                    int(m["bytes"]), time.time())]
+            row = [(int(epoch_id), *extraction_sums(out)[0], time.time())]
             (
                 spark.createDataFrame(row, PROGRESS_SCHEMA)
                 .write.mode("overwrite")

@@ -54,3 +54,18 @@ def rows_to_tuples(spans) -> list[tuple]:
 
 def golden_tuples(golden_spans: list[list]) -> list[tuple]:
     return [tuple(s) for s in golden_spans]
+
+
+def extract_rows(docs: list[dict]) -> list[dict]:
+    """Docs ({doc_id, spans: [span dicts]}) through the production mapInArrow
+    function as ONE CORPUS_ARROW batch → the EXTRACTED rows as dicts, in input
+    order."""
+    import pyarrow as pa
+
+    from pdf_extract_sys_spark.extract import extract_map_in_arrow
+    from pdf_extract_sys_spark.schema import CORPUS_ARROW
+
+    batch = pa.RecordBatch.from_pylist(
+        [{"doc_id": d["doc_id"], "spans": d["spans"]} for d in docs], schema=CORPUS_ARROW
+    )
+    return [r for b in extract_map_in_arrow(iter([batch])) for r in b.to_pylist()]

@@ -4,33 +4,16 @@ fully hand-written expectations (guarding against a shared oracle/kernel bug).""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
-from conftest import golden_tuples
+from conftest import extract_rows, golden_tuples
 from fixtures_def import fixture_docs
-
-from pdf_extract_sys_spark.extract import extract_docs_safe
 
 
 def run_pandas(docs: list[dict]) -> dict[str, list[tuple]]:
-    doc_ids = np.array([d["doc_id"] for d in docs], dtype=object)
-    flat = [dict(s, doc_id=d["doc_id"]) for d in docs for s in d["spans"]]
-    span_rows = (
-        pd.DataFrame(flat)[["doc_id", "kind", "text", "media_ref", "offset"]]
-        if flat
-        else pd.DataFrame(columns=["doc_id", "kind", "text", "media_ref", "offset"])
-    )
-    out, _ = extract_docs_safe(span_rows, doc_ids)
-    res: dict[str, list[tuple]] = {d: [] for d in doc_ids}
-    out = out.sort_values(["doc_id", "out_offset"])
-    for did, kind, text, mref, off in zip(
-        out["doc_id"], out["kind"], out["text"], out["media_ref"], out["out_offset"]
-    ):
-        res[did].append(
-            (kind, None if pd.isna(text) else text, None if pd.isna(mref) else mref, int(off))
-        )
-    return res
+    return {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in extract_rows(docs)
+    }
 
 
 @pytest.fixture(scope="module")

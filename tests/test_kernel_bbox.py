@@ -13,12 +13,19 @@ from pdf_extract_sys_spark.kernels import ocr as O
 from pdf_extract_sys_spark.kernels import pdf_text as P
 
 
+def _page(payload: str) -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": ["d"], "page": [0], "pos": [0], "payload": [payload]})
+
+
 def _pdf_spans(payload: str) -> pd.DataFrame:
-    ev, bad = P.decode_pdf_char_events(
-        pd.DataFrame({"doc_id": ["d"], "page": [0], "payload": [payload]})
-    )
+    ev, bad = P.decode_pdf_core(_page(payload))
     assert not len(bad)
-    return P.segment_sentences(ev)
+    return P.segment_sentences_core(ev)
+
+
+def _ocr_spans(payload: str) -> tuple[pd.DataFrame, pd.Index]:
+    ev, bad = O.decode_ocr_core(_page(payload))
+    return O.group_ocr_lines_core(ev), bad
 
 
 def test_pdf_normalization_yflip_exact():
@@ -65,11 +72,8 @@ def test_random_ocr_envelopes_match_oracle():
     for i in range(25):
         words = C._random_ocr_words(rng, int(rng.integers(5, 60)))
         payload = C.encode_ocr_page(words)
-        ev, bad = O.decode_ocr_word_events(
-            pd.DataFrame({"doc_id": ["d"], "page": [0], "payload": [payload]})
-        )
+        spans, bad = _ocr_spans(payload)
         assert not len(bad)
-        spans = O.group_ocr_lines(ev)
         iw, ih, events = ORC.decode_ocr_payload(payload)
         gold = ORC.ocr_group_oracle(iw, ih, events)
         assert len(spans) == len(gold)
@@ -80,8 +84,7 @@ def test_random_ocr_envelopes_match_oracle():
 
 def test_ocr_no_yflip():
     payload = C.encode_ocr_page([("w.", 90, 100, 140, 300, 28, 1, 1)], img_w=1000, img_h=1400)
-    ev, _ = O.decode_ocr_word_events(pd.DataFrame({"doc_id": ["d"], "page": [0], "payload": [payload]}))
-    spans = O.group_ocr_lines(ev)
+    spans, _ = _ocr_spans(payload)
     l, t, r, b = spans.iloc[0][["l", "t", "r", "b"]]
     assert np.isclose(l, 10.0) and np.isclose(t, 10.0)
     assert np.isclose(r, 40.0) and np.isclose(b, 12.0)

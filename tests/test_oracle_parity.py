@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import extract_rows
 from oracle import oracle_extract_doc
 from test_fixture_goldens import run_pandas
 
@@ -73,15 +74,9 @@ def test_sentinel_totality_fuzz():
 
 def test_metrics_counts():
     docs = C.generate_corpus(50, seed=5).to_dict("records")
-    doc_ids = np.array([d["doc_id"] for d in docs], dtype=object)
-    flat = [dict(s, doc_id=d["doc_id"]) for d in docs for s in d["spans"]]
-    span_rows = pd.DataFrame(flat)[["doc_id", "kind", "text", "media_ref", "offset"]]
-
-    from pdf_extract_sys_spark.extract import extract_docs_safe
-
-    out, met = extract_docs_safe(span_rows, doc_ids)
-    met = met.set_index("doc_id")
-    per_doc = out.groupby("doc_id").size()
+    rows = extract_rows(docs)
+    met = pd.DataFrame(rows).set_index("doc_id")
+    per_doc = {r["doc_id"]: len(r["spans"]) for r in rows}
     for d in docs:
         did = d["doc_id"]
         gold = oracle_extract_doc(did, d["spans"])

@@ -558,13 +558,15 @@ def test_pure_image_pdf_needs_ocr_not_zero_spans(spark):
 def test_truly_empty_page_still_yields_zero_spans():
     """A page with NO content (no text, no images) keeps the old behavior:
     zero spans, no needs_ocr, no sentinel."""
-    import pandas as pd
+    from conftest import extract_rows
 
-    from pdf_extract_sys_spark.extract import extract_batch_pandas
     from pdf_extract_sys_spark.sources.pdf_bytes import pdf_to_page_records
 
     recs = pdf_to_page_records(make_pdf([b"q Q"]))
     assert recs == [("PAGE\t612\t792", 0, 0, ())]
+    (out,) = extract_rows([{"doc_id": "empty", "spans": [
+        {"kind": "pdf_chars", "text": recs[0][0], "media_ref": None, "offset": 0}]}])
+    assert out["spans"] == [] and not out["parse_failed"]
 
 
 def test_helvetica_afm_widths_no_widths_array():
