@@ -31,6 +31,9 @@ Two implementations with identical semantics, selected per batch:
     used whenever a batch contains any non-ASCII (or NULL) payload, and as
     the differential-test reference (tests/test_html_arrow.py pins the two
     against each other on adversarial inputs).
+
+``\x00`` is ordinary content to both chains (it also opens the internal image
+marker, as in ``tests/oracle.py``), so NUL-bearing payloads need no routing.
 """
 
 from __future__ import annotations
@@ -79,17 +82,11 @@ def extract_html_spans(docs: pd.DataFrame) -> pd.DataFrame:
     docs = docs.reset_index(drop=True)
     payloads = pa.array(docs["payload"].to_numpy(dtype=object), type=pa.string())
     # ASCII ⟺ utf8 length == byte length; the RE2 chain is exactly equivalent
-    # to the Python-re chain only there (see module docstring). NUL-bearing
-    # payloads are additionally excluded: the reference chain's numpy '<U'
-    # line buffer silently truncates TRAILING \x00 per line, a quirk the
-    # Arrow path does not reproduce — such payloads take the reference path.
+    # to the Python-re chain only there (see module docstring)
     if (
         payloads.null_count == 0
         and pc.all(
             pc.equal(pc.utf8_length(payloads), pc.binary_length(payloads))
-        ).as_py()
-        and not pc.any(
-            pc.greater(pc.count_substring(payloads, "\x00"), 0)
         ).as_py()
     ):
         return _extract_html_spans_arrow(docs, payloads)
@@ -237,7 +234,8 @@ def _extract_html_spans_pandas(docs: pd.DataFrame) -> pd.DataFrame:
     lines = s.str.split("\n")
     n = lines.str.len().to_numpy()
     flat = repeat_frame(docs[["doc_id", "page"]], n)
-    flat["line"] = np.concatenate(lines.to_numpy()) if n.sum() else np.empty(0, object)
+    # object dtype: a numpy '<U' buffer would drop each line's trailing \x00
+    flat["line"] = lines.explode().to_numpy(dtype=object)
     doc_row = np.repeat(np.arange(len(docs)), n)
     flat["lineno"] = grouped_cumsum(np.ones(len(flat), np.int64), doc_row) - 1
 

@@ -232,20 +232,3 @@ def md5_first32_slide5(buf: np.ndarray) -> np.ndarray:
             np.bitwise_or(w1, np.uint32(0x8000), out=w1)
             _compress5(w0, w1, out[c0:c1])
     return out.byteswap().astype(np.int64)
-
-
-def md5_first32_concat(chunks: "list[bytes]") -> np.ndarray:
-    """Convenience: hash a python list of byte strings (any lengths).
-    Vectorizes the <=119-byte ones, falls back per element beyond."""
-    lens = np.fromiter((len(c) for c in chunks), dtype=np.int64, count=len(chunks))
-    buf = np.frombuffer(b"".join(chunks), dtype=np.uint8)
-    starts = np.zeros(len(chunks), dtype=np.int64)
-    if len(chunks):
-        np.cumsum(lens[:-1], out=starts[1:])
-    short = lens <= 119
-    out = np.empty(len(chunks), dtype=np.int64)
-    si = np.nonzero(short)[0]
-    out[si] = md5_first32_var(buf, starts[si], lens[si])
-    for i in np.nonzero(~short)[0]:
-        out[i] = md5_first32_long(chunks[i])
-    return out

@@ -14,14 +14,20 @@ over numpy/Arrow arrays — the "cumsum-of-break-flags" sessionization pattern
       email     — next 3 raw chars ∈ {com, org, edu}           (main.py:379, 444)
       url       — accumulated tail ``www.`` (case-insens), raw index > 3
                                                                (main.py:447)
-  * bbox-less chars skipped from BOTH text and envelope but still occupy a raw
-    index for lookahead                                        (main.py:415-422)
+  * bbox-less chars skipped from the text but still occupy a raw index for
+    lookahead                                                  (main.py:415-422)
   * whitespace-only accumulations are NOT emitted and NOT reset — they merge
     forward into the next non-whitespace sentence              (main.py:452)
-  * emitted text is ``.strip()``-ed; envelope excludes leading/trailing
-    ``\\r \\n `` chars, then min/min/max/max                   (main.py:454-467)
-  * bbox normalized to percent with y-flip                     (main.py:425-430)
+  * emitted text is ``.strip()``-ed                            (main.py:467)
   * unterminated tail flushed                                  (main.py:476-488)
+
+Text only. The reference also computes a normalized bbox per sentence (y-flip,
+envelope trim, min/min/max/max; main.py:425-430, 454-464) for its frontend's
+highlights; the output contract (kind, text, media_ref, order) has no bbox, so
+page dimensions and coordinates are validated by the header and record regexes
+but never parsed — only whether a char has a bbox changes its text.
+``tests/oracle.py`` keeps the normalization as the executable spec for any
+future bbox column.
 
 Key insight making exact vectorization possible: the two "stateful" lookbehinds
 (decimal's ``current_sentence[-2]``, url's ``current_sentence[-4:]``) never straddle a
@@ -31,11 +37,11 @@ kept-char sequence reproduce them exactly (no fixpoint iteration needed).
 
 Performance design (the 100 TB path):
   * payload parsing runs on **pyarrow compute** (C++ kernels: split_pattern,
-    regex match, lpad, casts) — no pandas object-string loops;
+    regex match, lpad) — no pandas object-string loops;
   * chars are **uint32 codepoints**; every rule is integer math; text materializes
     only at span granularity via the C ``utf-32`` codec on contiguous slices;
-  * all per-group aggregations are ``np.minimum/maximum.reduceat`` over contiguous
-    runs keyed by dense int32 page codes — zero object sorts, zero merges;
+  * per-group tests are ``np.minimum.reduceat`` over contiguous runs keyed by
+    dense int32 page codes — zero object sorts, zero merges;
   * ``.``-exception masks are evaluated only at dot positions (a tiny subset).
 
 One deliberate divergence: ``main.py:436`` indexes ``full_text[index+1]`` unguarded and
@@ -51,9 +57,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .util import grouped_cumsum
+from .util import grouped_cumsum, page_records
 
-_HEADER_RE = r"^PAGE\t(\d+(?:\.\d+)?)\t(\d+(?:\.\d+)?)$"
 _NUM = r"-?\d+(?:\.\d+)?"
 _EVENT_FULL_RE = rf"^[0-9a-fA-F]{{1,8}}\t(?:-|{_NUM}\t{_NUM}\t{_NUM}\t{_NUM})$"
 
@@ -61,19 +66,15 @@ EMPTY_SPANS = pd.DataFrame(
     {
         "doc_id": pd.Series(dtype=object),
         "page": pd.Series(dtype=np.int64),
+        "pos": pd.Series(dtype=np.int64),
         "seq": pd.Series(dtype=np.int64),
         "text": pd.Series(dtype=object),
-        "l": pd.Series(dtype=np.float64),
-        "t": pd.Series(dtype=np.float64),
-        "r": pd.Series(dtype=np.float64),
-        "b": pd.Series(dtype=np.float64),
     }
 )
 
 _CP_DOT, _CP_BANG, _CP_Q, _CP_NL, _CP_FFFE = 0x2E, 0x21, 0x3F, 0x0A, 0xFFFE
-_CP_CR, _CP_SP = 0x0D, 0x20
+_CP_SP = 0x20
 _ENDER_CPS = np.array([_CP_DOT, _CP_BANG, _CP_Q, _CP_NL, _CP_FFFE], dtype=np.uint32)
-_TRIM_CPS = np.array([_CP_CR, _CP_NL, _CP_SP], dtype=np.uint32)
 # Python str.isspace() codepoints (str.strip() strips exactly these)
 _PY_WS_CPS = np.array(
     sorted(
@@ -94,15 +95,14 @@ class PdfEvents:
     """Flat columnar char-event stream, page-major (dense int32 page code `prow`
     indexing `page_tab`); chars as uint32 codepoints; rows in stream order."""
 
-    __slots__ = ("prow", "cp", "has_bbox", "x0", "y0", "x1", "y1", "page_tab")
+    __slots__ = ("prow", "cp", "has_bbox", "page_tab")
 
-    def __init__(self, prow, cp, has_bbox, x0, y0, x1, y1, page_tab: pd.DataFrame):
+    def __init__(self, prow, cp, has_bbox, page_tab: pd.DataFrame):
         self.prow = prow
         self.cp = cp
         self.has_bbox = has_bbox
-        self.x0, self.y0, self.x1, self.y1 = x0, y0, x1, y1
-        # page_tab columns: doc_id (object), page (int64), pos (int64),
-        # page_w, page_h (float64) — one row per input pdf_chars span
+        # page_tab columns: doc_id, page (int64), pos (int64) — one row per
+        # input pdf_chars span
         self.page_tab = page_tab
 
     def __len__(self) -> int:
@@ -113,30 +113,10 @@ class PdfEvents:
         stay valid)."""
         m = page_mask[self.prow]
         if m.all():
-            # nothing filtered (the common all-searchable batch): skip eight
+            # nothing filtered (the common all-searchable batch): skip three
             # full-array gather copies; events are read-only downstream
             return self
-        return PdfEvents(
-            self.prow[m], self.cp[m], self.has_bbox[m],
-            self.x0[m], self.y0[m], self.x1[m], self.y1[m], self.page_tab,
-        )
-
-
-def _empty_events(page_tab: pd.DataFrame) -> PdfEvents:
-    z = np.empty(0)
-    return PdfEvents(
-        np.empty(0, np.int32), np.empty(0, np.uint32), np.empty(0, bool),
-        z, z, z, z, page_tab,
-    )
-
-
-def _list_field(values: pa.Array, offsets: np.ndarray, counts: np.ndarray, i: int):
-    """i-th element of each list in a (values, offsets) list layout; rows with
-    count <= i get index 0 and must be masked by the caller. Returns (arrow array,
-    present mask)."""
-    present = counts > i
-    idx = np.where(present, offsets[:-1] + i, 0)
-    return values.take(pa.array(idx, type=pa.int64())), present
+        return PdfEvents(self.prow[m], self.cp[m], self.has_bbox[m], self.page_tab)
 
 
 def decode_pdf_core(pages: pd.DataFrame) -> tuple[PdfEvents, pd.Index]:
@@ -145,112 +125,23 @@ def decode_pdf_core(pages: pd.DataFrame) -> tuple[PdfEvents, pd.Index]:
     pages: columns (doc_id, page, pos, payload), one row per pdf_chars span.
     Returns (events, bad_doc_ids): docs with any malformed payload (bad header or
     record) fail whole — the analogue of pdfium refusing the file (main.py:157-164).
-    All string parsing is pyarrow C++ compute.
+    Page dimensions and coordinates are validated, never parsed: the text needs
+    only each char and whether it has a bbox. Records are parsed with pyarrow
+    C++ compute; only the one header per page goes through Python ``re``.
     """
-    pages = pages.reset_index(drop=True)
-    npages = len(pages)
-    page_tab = pages[["doc_id", "page", "pos"]].copy()
-    page_tab["page_w"] = np.nan
-    page_tab["page_h"] = np.nan
-    if not npages:
-        return _empty_events(page_tab), pd.Index([])
-
-    payloads = pa.array(pages["payload"].to_numpy(dtype=object), type=pa.string())
-    lines = pc.split_pattern(payloads, "\n")
-    loffsets = lines.offsets.to_numpy(zero_copy_only=False)
-    lcounts = np.diff(loffsets)
-    lvalues = lines.values  # flat line strings
-    prow_all = np.repeat(np.arange(npages, dtype=np.int32), lcounts)
-
-    nflat = len(lvalues)
-    first = np.zeros(nflat, dtype=bool)
-    first[loffsets[:-1][lcounts > 0]] = True
-
-    # headers (small: one per page)
-    hdr = pd.Series(lvalues.take(pa.array(loffsets[:-1], type=pa.int64())).to_pandas())
-    hx = hdr.str.extract(_HEADER_RE)
-    bad_page = (hx[0].isna() | (lcounts == 0)).to_numpy()
-    okp = ~bad_page
-    page_tab.loc[okp, "page_w"] = pd.to_numeric(hx[0][okp]).to_numpy()
-    page_tab.loc[okp, "page_h"] = pd.to_numeric(hx[1][okp]).to_numpy()
-
-    body_mask = ~first
-    blen = pc.utf8_length(lvalues).to_numpy(zero_copy_only=False)
-    body_mask &= blen > 0
-    body = lvalues.filter(pa.array(body_mask))
-    bprow = prow_all[body_mask]
-
-    if len(body) == 0:
-        bad_doc_ids = pd.Index(sorted(set(page_tab.loc[bad_page, "doc_id"])))
-        return _empty_events(page_tab), bad_doc_ids
-
-    # ONE structural regex validates the whole record (hex + '-' | 4 numerics);
-    # field extraction then casts without further checks
-    row_ok = pc.match_substring_regex(body, _EVENT_FULL_RE).to_numpy(zero_copy_only=False)
-
-    fields = pc.split_pattern(body, "\t")
-    foff = fields.offsets.to_numpy(zero_copy_only=False)
-    fcnt = np.diff(foff)
-    fvals = fields.values
-    f0, _ = _list_field(fvals, foff, fcnt, 0)
-    f1, p1 = _list_field(fvals, foff, fcnt, 1)
-    is_dash = pc.equal(f1, "-").to_numpy(zero_copy_only=False) & p1
-    shape5 = fcnt == 5
-
-    bad_pages_mask = bad_page.copy()
-    if (~row_ok).any():
-        bad_pages_mask[np.unique(bprow[~row_ok])] = True
-    bad_doc_ids = pd.Index(sorted(set(page_tab.loc[bad_pages_mask, "doc_id"])))
-
-    # drop events belonging to any page of a bad doc
-    doc_bad = page_tab["doc_id"].isin(bad_doc_ids).to_numpy()
-    keep = ~doc_bad[bprow]
-    if not keep.all():
-        keep_arr = pa.array(keep)
-        body = body.filter(keep_arr)
-        bprow = bprow[keep]
-        fields = pc.split_pattern(body, "\t")
-        foff = fields.offsets.to_numpy(zero_copy_only=False)
-        fcnt = np.diff(foff)
-        fvals = fields.values
-        f0, _ = _list_field(fvals, foff, fcnt, 0)
-        f1, _ = _list_field(fvals, foff, fcnt, 1)
-        is_dash = pc.equal(f1, "-").to_numpy(zero_copy_only=False) & (fcnt > 1)
-        shape5 = fcnt == 5
-    if len(body) == 0:
-        return _empty_events(page_tab), bad_doc_ids
-
-    # hex → codepoints: lpad to 8, join the whole column into ONE hex string (C++),
-    # bytes.fromhex (C), big-endian uint32 view
-    padded = pc.utf8_lpad(f0, 8, "0")
+    page_tab, body, bprow, bad_doc_ids = page_records(pages, _EVENT_FULL_RE)
+    # hex → codepoints: split at the first tab only, lpad to 8, join the whole
+    # column into ONE hex string (C++), bytes.fromhex (C), big-endian uint32 view
+    hexes = pc.list_element(pc.split_pattern(body, "\t", max_splits=1), 0)
+    padded = pc.utf8_lpad(hexes, 8, "0")
     one = pa.ListArray.from_arrays(
         pa.array([0, len(padded)], type=pa.int32()), padded
     )
     blob = bytes.fromhex(pc.binary_join(one, "")[0].as_py())
     cps = np.frombuffer(blob, dtype=">u4").astype(np.uint32)
-
-    # coords: cast only valid 5-field rows (others → NaN)
-    n = len(body)
-    x0 = np.full(n, np.nan)
-    y0 = np.full(n, np.nan)
-    x1 = np.full(n, np.nan)
-    y1 = np.full(n, np.nan)
-    if shape5.any():
-        # reuse the existing field split (r6): filtering the ListArray is a
-        # buffer-level take — re-splitting every body line cost a second full
-        # pass over the batch's bytes in the common all-coords case
-        sub = fields if shape5.all() else fields.filter(pa.array(shape5))
-        soff = sub.offsets.to_numpy(zero_copy_only=False)
-        scnt = np.diff(soff)
-        svals = sub.values
-        for k, dst in ((1, x0), (2, y0), (3, x1), (4, y1)):
-            fk, _ = _list_field(svals, soff, scnt, k)
-            dst[shape5] = pc.cast(fk, pa.float64()).to_numpy(zero_copy_only=False)
-
-    return (
-        PdfEvents(bprow, cps, ~is_dash, x0, y0, x1, y1, page_tab),
-        bad_doc_ids,
-    )
+    # a valid record ends in a digit unless it is the bbox-less "hex\t-" form
+    has_bbox = ~pc.ends_with(body, "\t-").to_numpy(zero_copy_only=False)
+    return PdfEvents(bprow, cps, has_bbox, page_tab), bad_doc_ids
 
 
 def page_stripped_lengths_core(ev: PdfEvents) -> np.ndarray:
@@ -288,10 +179,9 @@ def _isdigit_cps(cps: np.ndarray) -> np.ndarray:
 
 
 def segment_sentences_core(ev: PdfEvents) -> pd.DataFrame:
-    """Char events → sentence spans: (doc_id, page, pos, seq, text, l, t, r, b);
-    seq = within-page emit order. Implements main.py:413-488 exactly."""
+    """Char events → sentence spans: (doc_id, page, pos, seq, text); seq =
+    within-page emit order. Implements main.py:413-488 exactly, less the bbox."""
     empty = EMPTY_SPANS.copy()
-    empty["pos"] = pd.Series(dtype=np.int64)
     if not len(ev):
         return empty
 
@@ -401,40 +291,6 @@ def segment_sentences_core(ev: PdfEvents) -> pd.DataFrame:
     vbig = _cps_to_str(vcp)
     ftexts = [vbig[s:e].strip() for s, e in zip(fstart_rows, fends)]  # span-level
 
-    # --- envelope: trim leading/trailing {\r,\n,' '} then min/min/max/max --------
-    fcodes = (np.cumsum(ffirst) - 1).astype(np.int64)
-    not_trim = ~np.isin(vcp, _TRIM_CPS)
-    pos_v = np.arange(len(vcp), dtype=np.int64)
-    big_pos = np.where(not_trim, pos_v, np.iinfo(np.int64).max)
-    small_pos = np.where(not_trim, pos_v, -1)
-    first_nt = np.minimum.reduceat(big_pos, fstart_rows)
-    last_nt = np.maximum.reduceat(small_pos, fstart_rows)
-    env = (pos_v >= first_nt[fcodes]) & (pos_v <= last_nt[fcodes])
-
-    w = ev.page_tab["page_w"].to_numpy()[vpg]
-    h = ev.page_tab["page_h"].to_numpy()[vpg]
-    X0 = ev.x0[kpos][row_valid]
-    Y0 = ev.y0[kpos][row_valid]
-    X1 = ev.x1[kpos][row_valid]
-    Y1 = ev.y1[kpos][row_valid]
-    # main.py:425-430 (y-flip; payload y0=bottom, y1=top)
-    nl = (X0 / w) * 100.0
-    nt = ((h - Y1) / h) * 100.0
-    nr = (X1 / w) * 100.0
-    nb = ((h - Y0) / h) * 100.0
-
-    env_codes = fcodes[env]
-    efirst = np.ones(len(env_codes), dtype=bool)
-    efirst[1:] = env_codes[1:] != env_codes[:-1]
-    estart = np.nonzero(efirst)[0]
-    l = np.minimum.reduceat(nl[env], estart)
-    t = np.minimum.reduceat(nt[env], estart)
-    r = np.maximum.reduceat(nr[env], estart)
-    b = np.maximum.reduceat(nb[env], estart)
-    # every final group's text strips non-empty ⇒ it has ≥1 non-trim char ⇒ the
-    # reduceat segments align 1:1 with final groups
-    assert len(estart) == len(fstart_rows)
-
     f_page = vpg[fstart_rows]
     seq = grouped_cumsum(np.ones(len(f_page), np.int64), f_page) - 1
 
@@ -446,10 +302,6 @@ def segment_sentences_core(ev: PdfEvents) -> pd.DataFrame:
             "pos": tab["pos"].to_numpy()[f_page],
             "seq": seq,
             "text": ftexts,
-            "l": l,
-            "t": t,
-            "r": r,
-            "b": b,
         }
     )
 

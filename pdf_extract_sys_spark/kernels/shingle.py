@@ -174,22 +174,6 @@ def _rows_vals_to_list_array(rows, vals, nrows):
     )
 
 
-def _per_row_hash5(batch_t):
-    """list of per-row int64 hash arrays (ASCII vectorized, fallback exact).
-    Compatibility/test surface — the hot kernels consume _Shingle5 flat."""
-    sh = _Shingle5(batch_t)
-    out: list = [None] * sh.nrows
-    for r in sh.long_rows:
-        out[r] = sh.h[sh.offs[r] : sh.offs[r + 1] - 4]
-    for j, r in enumerate(sh.short_rows):
-        out[r] = sh.short_h[j : j + 1]
-    for j, r in enumerate(sh.fb_rows):
-        out[r] = sh.fb_h[j]
-    return out
-
-
-
-
 def minhash_batches(coeffs):
     """mapInArrow factory: (doc_id, t) -> (doc_id, h0..h7) minhash signatures.
     coeffs: list of (a, b) affine permutation coefficients. Per-permutation
@@ -461,27 +445,6 @@ def _ngram_parts(batch_t, gram: int):
     h_flat = np.concatenate(h_parts) if h_parts else np.empty(0, np.int64)
     row_ids = np.concatenate(row_parts) if row_parts else np.empty(0, np.int64)
     return h_flat, row_ids, ntok_all, nrows
-
-
-def _per_row_ngram_hashes(batch_t, gram: int):
-    """list of per-row int64 hash arrays of word-n-grams (row order kept).
-    Compatibility/test surface — hot kernels consume _ngram_parts flat."""
-    h_flat, row_ids, _ntok, nrows = _ngram_parts(batch_t, gram)
-    out: list = [None] * nrows
-    # row_ids is NOT globally sorted (fallback rows append after ASCII rows),
-    # but each row's hashes are contiguous and in order — stable-split works
-    order = np.argsort(row_ids, kind="stable")
-    rs = row_ids[order]
-    bounds = np.nonzero(np.diff(rs))[0] + 1
-    for r, chunk in zip(
-        rs[np.concatenate(([0], bounds))] if len(rs) else [],
-        np.split(h_flat[order], bounds),
-    ):
-        out[int(r)] = chunk
-    for r in range(nrows):
-        if out[r] is None:
-            out[r] = np.empty(0, dtype=np.int64)
-    return out
 
 
 def dsir_count_batches(buckets: int, lo: int, hi: int):

@@ -11,6 +11,7 @@ import random
 import pandas as pd
 import pyarrow as pa
 import pytest
+import oracle as ORC
 
 from pdf_extract_sys_spark.kernels import html as H
 
@@ -123,19 +124,19 @@ def test_no_kept_lines(payload):
 
 
 def test_nul_payloads_route_to_reference_path():
-    # trailing \x00 per line is silently truncated by the reference chain's
-    # numpy '<U' line buffer; the dispatcher must route NUL-bearing payloads
-    # to the reference path (review finding: the arrow chain preserves NULs)
-    docs = pd.DataFrame(
-        {
-            "doc_id": ["a", "b"],
-            "page": [0, 0],
-            "payload": [
-                "x" * 24 + "\x00" + "<br>more text that is long enough here",
-                "plain ascii paragraph that is long enough to keep ok",
-            ],
-        }
-    )
-    got = H.extract_html_spans(docs)
-    ref = H._extract_html_spans_pandas(docs)
-    pd.testing.assert_frame_equal(got.reset_index(drop=True), ref.reset_index(drop=True))
+    # \x00 is content: both chains keep it wherever it sits in a line, as the
+    # oracle does (a numpy '<U' line buffer would drop each line's trailing
+    # \x00). The ASCII batch takes the Arrow chain, the non-ASCII one pandas.
+    ascii_batch = [
+        "x" * 24 + "\x00" + "<br>more text that is long enough here",
+        "plain ascii paragraph that is long enough to keep ok",
+    ]
+    for payloads in (ascii_batch, ascii_batch + ["é" * 24 + "\x00<p>ü\x00 and a line long enough\x00"]):
+        docs = pd.DataFrame({"doc_id": [f"d{i}" for i in range(len(payloads))],
+                             "page": 0, "payload": payloads})
+        got = H.extract_html_spans(docs)
+        for i, payload in enumerate(payloads):
+            g = got[got["doc_id"] == f"d{i}"]
+            spans = [(k, t if k == "text" else None, m if k == "media" else None)
+                     for k, t, m in zip(g["kind"], g["text"], g["media_ref"])]
+            assert spans == ORC.extract_html_oracle(payload), payload

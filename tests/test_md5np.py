@@ -15,7 +15,6 @@ import pyarrow as pa
 import pytest
 
 from pdf_extract_sys_spark.kernels.md5np import (
-    md5_first32_concat,
     md5_first32_long,
     md5_first32_var,
 )
@@ -24,6 +23,58 @@ from pdf_extract_sys_spark.kernels import shingle as sh
 
 def _ref32(data: bytes) -> int:
     return int(hashlib.md5(data).hexdigest()[:8], 16)
+
+
+def md5_first32_concat(chunks: "list[bytes]") -> np.ndarray:
+    """Hash a python list of byte strings (any lengths): the <=119-byte ones
+    through the vectorized kernel, longer ones one by one."""
+    lens = np.fromiter((len(c) for c in chunks), dtype=np.int64, count=len(chunks))
+    buf = np.frombuffer(b"".join(chunks), dtype=np.uint8)
+    starts = np.zeros(len(chunks), dtype=np.int64)
+    if len(chunks):
+        np.cumsum(lens[:-1], out=starts[1:])
+    short = lens <= 119
+    out = np.empty(len(chunks), dtype=np.int64)
+    si = np.nonzero(short)[0]
+    out[si] = md5_first32_var(buf, starts[si], lens[si])
+    for i in np.nonzero(~short)[0]:
+        out[i] = md5_first32_long(chunks[i])
+    return out
+
+
+def _per_row_hash5(batch_t):
+    """list of per-row int64 hash arrays of the flat sliding 5-char hashes the
+    hot kernels consume (ASCII vectorized, fallback exact)."""
+    s = sh._Shingle5(batch_t)
+    out: list = [None] * s.nrows
+    for r in s.long_rows:
+        out[r] = s.h[s.offs[r] : s.offs[r + 1] - 4]
+    for j, r in enumerate(s.short_rows):
+        out[r] = s.short_h[j : j + 1]
+    for j, r in enumerate(s.fb_rows):
+        out[r] = s.fb_h[j]
+    return out
+
+
+def _per_row_ngram_hashes(batch_t, gram: int):
+    """list of per-row int64 hash arrays of word-n-grams (row order kept), from
+    the flat ``_ngram_parts`` the hot kernels consume."""
+    h_flat, row_ids, _ntok, nrows = sh._ngram_parts(batch_t, gram)
+    out: list = [None] * nrows
+    # row_ids is NOT globally sorted (fallback rows append after ASCII rows),
+    # but each row's hashes are contiguous and in order — stable-split works
+    order = np.argsort(row_ids, kind="stable")
+    rs = row_ids[order]
+    bounds = np.nonzero(np.diff(rs))[0] + 1
+    for r, chunk in zip(
+        rs[np.concatenate(([0], bounds))] if len(rs) else [],
+        np.split(h_flat[order], bounds),
+    ):
+        out[int(r)] = chunk
+    for r in range(nrows):
+        if out[r] is None:
+            out[r] = np.empty(0, dtype=np.int64)
+    return out
 
 
 def test_md5_var_matches_hashlib_adversarial_lengths():
@@ -78,14 +129,14 @@ def _ref_ngrams(text: str, gram: int):
 
 
 def test_per_row_hash5_matches_reference():
-    out = sh._per_row_hash5(_batch(EDGE_TEXTS).column(1))
+    out = _per_row_hash5(_batch(EDGE_TEXTS).column(1))
     for text, got in zip(EDGE_TEXTS, out):
         assert list(got) == _ref_shingle5(text), text
 
 
 def test_per_row_ngram_hashes_match_reference():
     for gram in (2, 8):
-        out = sh._per_row_ngram_hashes(_batch(EDGE_TEXTS).column(1), gram)
+        out = _per_row_ngram_hashes(_batch(EDGE_TEXTS).column(1), gram)
         for text, got in zip(EDGE_TEXTS, out):
             assert list(got) == _ref_ngrams(text, gram), (gram, text)
 

@@ -77,6 +77,13 @@ ROUTING_DOCS = pd.DataFrame(
             C.span("pdf_chars", None, None, 1),
             C.span("ocr_words", _ocr_page("Scanned."), None, 2),
         ]},
+        # a page header in Arabic-Indic digits (valid to the header regex, as
+        # in the reference): the router must classify it, not raise
+        {"doc_id": "R04", "spans": [
+            C.span("pdf_chars", "PAGE\t٦١٢\t٧٩٢" + C.encode_pdf_text(FILLER)[len("PAGE\t612\t792"):],
+                   None, 0),
+            C.span("ocr_words", _ocr_page("Scanned."), None, 1),
+        ]},
     ]
 )
 
@@ -91,6 +98,7 @@ def test_salt_invariance(spark, tmp_path, small_corpus):
     unsalted = collect_spans(extract_corpus(src, salt_threshold=10**9))
     assert unsalted["R01"][-1][0] == "text" and unsalted["R02"][0][0] == "text"
     assert unsalted["R03"] == [("error", "[Error processing doc R03]", None, 0)]
+    assert unsalted["R04"] and all(s[0] == "text" for s in unsalted["R04"])
     fully_salted = collect_spans(extract_corpus(src, salt_threshold=0, salted_parallelism=7))
     assert fully_salted == unsalted
     widest = int(docs["spans"].str.len().max())
