@@ -60,7 +60,8 @@ EMPTY_SPANS = pd.DataFrame(
 
 class OcrEvents:
     """Flat columnar word-event stream, page-major (dense int32 `prow` indexing
-    `page_tab`); words kept as an Arrow string array for C++ join/endswith."""
+    `page_tab`); words kept as an Arrow string array for C++ join/endswith;
+    `line` holds integer codes that compare like the line numbers."""
 
     __slots__ = ("prow", "words", "conf", "line", "page_tab")
 
@@ -84,17 +85,14 @@ def decode_ocr_core(pages: pd.DataFrame) -> tuple[OcrEvents, pd.Index]:
     page_tab, body, bprow, bad_docs = page_records(pages, _EVENT_FULL_RE)
     # split ONCE, after the keep-filter: every surviving record has 8 fields
     fields = pc.split_pattern(body, "\t")
-
-    def fnum(i: int) -> np.ndarray:
-        return pc.cast(pc.list_element(fields, i), pa.float64()).to_numpy(
-            zero_copy_only=False
-        )
-
-    return (
-        OcrEvents(bprow, pc.list_element(fields, 0), fnum(1),
-                  fnum(7).astype(np.int64), page_tab),
-        bad_docs,
-    )
+    conf = pc.cast(pc.list_element(fields, 1), pa.float64()).to_numpy(zero_copy_only=False)
+    # exact line keys of any length: codes of the digit strings normalized to int()
+    # equality (leading zeros stripped, -0 → 0), the regexes run per distinct string
+    raw = pc.dictionary_encode(pc.list_element(fields, 7))
+    norm = pc.replace_substring_regex(raw.dictionary, r"^(-?)0*(\d)", r"\1\2")
+    norm = pc.dictionary_encode(pc.replace_substring_regex(norm, r"^-0$", "0")).indices
+    line = norm.take(raw.indices).to_numpy(zero_copy_only=False)
+    return OcrEvents(bprow, pc.list_element(fields, 0), conf, line, page_tab), bad_docs
 
 
 def group_ocr_lines_core(ev: OcrEvents) -> pd.DataFrame:

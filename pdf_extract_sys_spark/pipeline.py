@@ -16,13 +16,15 @@ local[N]:
     groupBy(doc_id) + array_sort, sealing the final reading-order offsets.
     Shuffles touch only the mega tail, never the main corpus.
 
-The two sub-plans union to one DataFrame with EXTRACTED_SCHEMA. Plan audit:
-only MapInArrow Python nodes — never BatchEvalPython (north rule).
+The two sub-plans union to one DataFrame with EXTRACTED_SCHEMA; a plan built
+knowing the tail is empty is the normal path alone (see extract_corpus). Plan
+audit: only MapInArrow Python nodes — never BatchEvalPython (north rule).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
@@ -152,24 +154,54 @@ def _extract_salted(mega: DataFrame, salted_parallelism: int | None) -> DataFram
     return out
 
 
+def _stats_max(corpus: DataFrame, col: str) -> int | None:
+    """Max of ``col`` over the row-group statistics of ``corpus``'s parquet
+    footers, read one by one on the driver (one FileSystem per scheme and host),
+    so the cost grows with the file count. None if there are no files (in-memory
+    corpus), a statistic is missing or a footer is unreadable (any error)."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    try:
+        highs, roots = [], {}
+        for uri in corpus.inputFiles():
+            u = urlparse(uri)
+            if (u.scheme, u.netloc) not in roots:  # root: from_uri's path less the URI's
+                fsys, path = fs.FileSystem.from_uri(uri)
+                roots[u.scheme, u.netloc] = fsys, path[:len(path) - len(unquote(u.path))]
+            fsys, root = roots[u.scheme, u.netloc]
+            md = pq.read_metadata(root + unquote(u.path), filesystem=fsys)
+            j = [md.schema.column(k).path for k in range(md.num_columns)].index(col)
+            stats = [md.row_group(g).column(j).statistics for g in range(md.num_row_groups)]
+            highs += [st.max if st is not None and st.has_min_max else None for st in stats]
+        return max(highs) if highs and None not in highs else None
+    except Exception:
+        return None
+
+
 def extract_corpus(
     corpus: DataFrame,
     *,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     salted_parallelism: int | None = None,
     size_col: str | None = None,
+    max_spans: int | None = None,
 ) -> DataFrame:
     """corpus (doc_id, spans) → EXTRACTED_SCHEMA (doc_id, spans, n_spans,
     parse_failed, bytes_in). Normal docs shuffle-free; skewed mega-docs salted.
 
     ``size_col`` names an OPTIONAL precomputed span-count column (see
-    write_corpus_parquet) used for the normal/mega routing predicate instead of
-    ``size(spans)``. The difference matters at scale: ``size(spans)`` cannot
-    reach the parquet reader, so the mega branch and its routing sub-plan
-    re-decode the ENTIRE corpus to find the skew tail; a plain int column
-    pushes down (PushedFilters) and prunes via row-group statistics, so the
-    mega-side scans touch only the row groups that actually contain mega docs
-    — the standard stats-column skew-routing pattern for 100 TB tables."""
+    write_corpus_parquet) routing normal/mega instead of ``size(spans)``; it
+    pushes down, so mega-side scans read only row groups that admit a mega doc.
+    When the plan is built knowing no doc exceeds ``salt_threshold`` spans — by
+    the caller-stated ``max_spans``, else by ``size_col``'s footer statistics
+    (_stats_max) — it is the normal path alone: one scan, zero Exchanges.
+    Salted ≡ unsalted, so a wrong bound costs time, never output. (Iceberg
+    manifest ``upper_bounds`` could stand in for the footers of a table.)"""
+    if max_spans is None and size_col:
+        max_spans = _stats_max(corpus, size_col)
+    if max_spans is not None and max_spans <= salt_threshold:
+        return corpus.select("doc_id", "spans").mapInArrow(extract_map_in_arrow, EXTRACTED_SCHEMA)
     size_expr = F.col(size_col) if size_col else F.size("spans")
     # NULL routing (r4 ADVICE): with size_col set, a NULL stats value fails BOTH
     # branch predicates (NULL <= x and NULL > x are both NULL) and the doc would
@@ -185,22 +217,6 @@ def extract_corpus(
     return out_normal.unionByName(out_mega)
 
 
-def extract_corpus_direct(corpus: DataFrame) -> DataFrame:
-    """Normal-path-only extraction (one mapInArrow pass, zero shuffles) for
-    corpora whose per-doc span count is STRUCTURALLY bounded far below
-    DEFAULT_SALT_THRESHOLD — the query-layer synthesized corpora: one span
-    per doc (documents_to_corpus, html wrap) or one per PDF page/figure
-    (pdf_binary_to_corpus over the ≤3-page serialized variants). For such
-    inputs this is value-identical to :func:`extract_corpus` (the mega
-    branch's ``size(spans) > threshold`` filter is provably empty), but the
-    plan reads the corpus ONCE — extract_corpus's two branch filters scan it
-    twice, which forced every caller to persist() a corpus whose synthesis
-    is itself an expensive mapInArrow (guide §2.4: remove the second pass
-    instead of caching around it). General/unbounded corpora must keep using
-    extract_corpus, which salts the skew tail."""
-    return corpus.mapInArrow(extract_map_in_arrow, EXTRACTED_SCHEMA)
-
-
 def extraction_sums(extracted: DataFrame, *keys: str) -> list[tuple]:
     """The one metrics rollup of an EXTRACTED_SCHEMA frame (the checkpointed
     batch job and the streaming job both use it): per group of ``keys``, the
@@ -212,15 +228,6 @@ def extraction_sums(extracted: DataFrame, *keys: str) -> list[tuple]:
         F.coalesce(F.sum(F.col("parse_failed").cast("long")), F.lit(0)),
         F.coalesce(F.sum("bytes_in"), F.lit(0)),
     ).collect()]
-
-
-def assert_no_per_row_python(df: DataFrame) -> None:
-    """North-rule audit: the physical plan must not contain BatchEvalPython
-    (row-at-a-time Python UDF). Allowed: PythonMapInArrow, ArrowEvalPython,
-    FlatMapGroupsInPandas."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "BatchEvalPython" in plan:
-        raise AssertionError("per-row Python (BatchEvalPython) found in plan:\n" + plan)
 
 
 def default_session(app: str = "pdf-extract-sys-spark", master: str | None = None,

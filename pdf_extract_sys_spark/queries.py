@@ -72,6 +72,16 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(p) if df.rdd.getNumPartitions() < p else df
 
 
+def _extractable_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id string, text) of the `documents` long enough to extract: the
+    input of every synthesized corpus, behind the _spread floor so that the
+    per-doc synthesis (regex, PDF serialization) parallelizes."""
+    return _spread(
+        _t(spark, sf_dir, "documents").filter(F.length("text") >= _MIN_CHARS)
+        .select("doc_id", "text")
+    ).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+
+
 def _h56(col) -> F.Column:
     """56-bit md5-derived hash, bit-identical to the DuckDB expression above."""
     return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("long")
@@ -2116,7 +2126,7 @@ SQL_DEDUP_EMB = _sql_dedup_emb()
 
 
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     blob = F.encode(F.col("text"), "utf-8")
     return docs.select(
         "doc_id",
@@ -2317,12 +2327,7 @@ def documents_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: the sanitize chain + sentence-dot grouping moved INSIDE the Arrow
     # kernel as RE2 (pyarrow compute) — the Catalyst Java-regex chain cost
     # ~1.5 ms/doc (2.3 s/query at sf1.0); RE2 is the oracle's own engine.
-    # _spread still precedes the kernel so the regex work parallelizes.
-    docs = _spread(
-        _t(spark, sf_dir, "documents")
-        .filter(F.length("text") >= _MIN_CHARS)
-        .select("doc_id", "text")
-    ).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    docs = _extractable_docs(spark, sf_dir)
 
     def encode(batches):
         import pyarrow.compute as pc
@@ -2410,14 +2415,14 @@ def q_extract_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END extraction through the real kernels (mapInArrow), oracled by a SQL
     re-derivation of the expected sentence spans. r6: one single-pass plan —
     the synthesized corpus emits exactly ONE span per doc by construction, so
-    the normal-path-only extract_corpus_direct applies (value-identical; the
-    mega branch is structurally empty) and the corpus is consumed exactly
-    once: no persist round-trip of ~6 KB/doc of char events, no second branch
-    scan (guide §2.4). The result stays eagerly localCheckpoint'ed."""
-    from .pipeline import extract_corpus_direct
+    extract_corpus(max_spans=1) plans the normal path alone (value-identical)
+    and the corpus is consumed exactly once: no persist round-trip of ~6
+    KB/doc of char events, no second branch scan (guide §2.4). The result
+    stays eagerly localCheckpoint'ed."""
+    from .pipeline import extract_corpus
 
     return (
-        extract_corpus_direct(documents_to_corpus(spark, sf_dir))
+        extract_corpus(documents_to_corpus(spark, sf_dir), max_spans=1)
         .select("doc_id", F.explode("spans").alias("s"))
         .select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -2786,11 +2791,7 @@ def documents_to_pdf_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the declared binary boundary, same as the decode side. r6: the sanitize
     + sentence-dot chain runs as RE2 inside the kernel (see _sanitize_arrow)
     instead of ~1.5 ms/doc of Catalyst Java regex."""
-    docs = _spread(
-        _t(spark, sf_dir, "documents")
-        .filter(F.length("text") >= _MIN_CHARS)
-        .select("doc_id", "text")
-    ).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    docs = _extractable_docs(spark, sf_dir)
 
     def serialize(batches):
         import pyarrow as pa
@@ -2882,11 +2883,7 @@ def documents_to_worklist_pdf_binary(spark: SparkSession, sf_dir: str) -> DataFr
     """(doc_id, pdf) frame of multi-page PDFs with deterministic image-only
     pages — the input for the needs-OCR work-list query. r6: sanitize runs as
     RE2 inside the kernel (see _sanitize_arrow), not Catalyst Java regex."""
-    docs = _spread(
-        _t(spark, sf_dir, "documents")
-        .filter(F.length("text") >= _MIN_CHARS)
-        .select("doc_id", "text")
-    ).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    docs = _extractable_docs(spark, sf_dir)
 
     def serialize(batches):
         import pyarrow as pa
@@ -2914,15 +2911,16 @@ def q_needs_ocr_worklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     'needs_ocr'` aggregated per doc (count + page list). This is the contract
     a downstream raster/OCR stage consumes — verified against the driver's
     DuckDB oracle, not just pytest shapes. r6: single-pass — worklist PDFs
-    carry ≤ 3 pages (+needs_ocr/media spans), far under the salt threshold,
-    so the normal-path-only extract_corpus_direct applies (value-identical)
-    and the corpus is consumed once, with no persist round-trip."""
-    from .pipeline import extract_corpus_direct
+    carry ≤ 3 pages (≤ 5 spans with needs_ocr/media), so extract_corpus(
+    max_spans=5) plans the normal path alone (value-identical) and the corpus
+    is consumed once, with no persist round-trip."""
+    from .pipeline import extract_corpus
     from .sources.pdf_bytes import pdf_binary_to_corpus
 
     out = (
-        extract_corpus_direct(
-            pdf_binary_to_corpus(documents_to_worklist_pdf_binary(spark, sf_dir))
+        extract_corpus(
+            pdf_binary_to_corpus(documents_to_worklist_pdf_binary(spark, sf_dir)),
+            max_spans=5,
         )
         .select("doc_id", F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == F.lit("needs_ocr"))
@@ -2960,14 +2958,15 @@ def q_media_figures(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's page 0 shows its text (one sentence span, out_offset 0), so the
     image pages' work-list + figure spans land at deterministic output
     offsets (needs_ocr at 1 / figure at 2; second image page at 3 / 4).
-    r6: single-pass via extract_corpus_direct (≤ 3-page corpus, mega branch
-    structurally empty) — no persist round-trip."""
-    from .pipeline import extract_corpus_direct
+    r6: single-pass via extract_corpus with ``max_spans=5`` (≤ 3-page
+    corpus, mega branch structurally empty) — no persist round-trip."""
+    from .pipeline import extract_corpus
     from .sources.pdf_bytes import pdf_binary_to_corpus
 
     ex = (
-        extract_corpus_direct(
-            pdf_binary_to_corpus(documents_to_worklist_pdf_binary(spark, sf_dir))
+        extract_corpus(
+            pdf_binary_to_corpus(documents_to_worklist_pdf_binary(spark, sf_dir)),
+            max_spans=5,
         )
         .select("doc_id", F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == F.lit("media"))
@@ -3065,15 +3064,15 @@ def q_extract_pdf_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentence spans. Oracled by the same SQL re-derivation as
     q_extract_sentences — proving the binary front-end reproduces the
     documented pdf_chars semantics end-to-end, not just in pytest. r6:
-    single-pass via extract_corpus_direct (the serialized variants are
-    single-page PDFs → 1-2 spans/doc, mega branch structurally empty) — no
-    persist round-trip of the decoded corpus."""
-    from .pipeline import extract_corpus_direct
+    single-pass via extract_corpus with ``max_spans=2`` (the serialized
+    variants are single-page PDFs → 1-2 spans/doc, mega branch structurally
+    empty) — no persist round-trip of the decoded corpus."""
+    from .pipeline import extract_corpus
     from .sources.pdf_bytes import pdf_binary_to_corpus
 
     return (
-        extract_corpus_direct(
-            pdf_binary_to_corpus(documents_to_pdf_binary(spark, sf_dir))
+        extract_corpus(
+            pdf_binary_to_corpus(documents_to_pdf_binary(spark, sf_dir)), max_spans=2
         )
         .select("doc_id", F.explode("spans").alias("s"))
         .select(
@@ -3092,12 +3091,12 @@ def q_extract_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, not dedup over the raw `documents` table. Per-doc text = the doc's
     span texts in reading order; signatures/banding/guards are the shared
     hash-once machinery. Oracled by the same SQL chain over the re-derived
-    corpus. r6: single-pass via extract_corpus_direct (synthesized corpus =
-    one span per doc, mega branch structurally empty) — no persist
-    round-trip."""
-    from .pipeline import extract_corpus_direct
+    corpus. r6: single-pass via extract_corpus with ``max_spans=1``
+    (synthesized corpus = one span per doc, mega branch structurally empty)
+    — no persist round-trip."""
+    from .pipeline import extract_corpus
 
-    texts = extract_corpus_direct(documents_to_corpus(spark, sf_dir)).select(
+    texts = extract_corpus(documents_to_corpus(spark, sf_dir), max_spans=1).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.array_join(F.transform("spans", lambda s: s["text"]), " ").alias("text"),
     )
@@ -3122,22 +3121,18 @@ def q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nav: link density 1 > 0.34; footer: < 25 visible chars), keep the content
     line, and emit the image as an interleaved media span — the north rule's
     'DOM text-density boilerplate strip' evidenced at the query level.
-    r6: single-pass via extract_corpus_direct (one html span per doc by
-    construction, mega branch structurally empty — the corpus is read once
-    instead of once per branch filter), and the sanitize + html wrap run as
+    r6: single-pass via extract_corpus with ``max_spans=1`` (one html span
+    per doc by construction, mega branch structurally empty — the corpus is
+    read once instead of once per branch filter), and the sanitize + html wrap run as
     RE2/C++ string kernels inside one mapInArrow instead of Catalyst Java
     regex (~1.5 ms/doc) + per-row concat."""
     import numpy as np
     import pyarrow as pa
 
-    from .pipeline import extract_corpus_direct
+    from .pipeline import extract_corpus
     from .schema import CORPUS_ARROW
 
-    docs = _spread(
-        _t(spark, sf_dir, "documents")
-        .filter(F.length("text") >= _MIN_CHARS)
-        .select("doc_id", "text")
-    ).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    docs = _extractable_docs(spark, sf_dir)
 
     def wrap(batches):
         import pyarrow.compute as pc
@@ -3176,7 +3171,7 @@ def q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         wrap,
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    out = extract_corpus_direct(corpus)
+    out = extract_corpus(corpus, max_spans=1)
     return out.select("doc_id", F.explode("spans").alias("s")).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("s.offset").alias("span_offset"),

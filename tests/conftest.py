@@ -52,6 +52,15 @@ def rows_to_tuples(spans) -> list[tuple]:
     return out
 
 
+def assert_no_per_row_python(df) -> None:
+    """North-rule audit: the physical plan must not contain BatchEvalPython
+    (row-at-a-time Python UDF). Allowed: PythonMapInArrow, ArrowEvalPython,
+    FlatMapGroupsInPandas."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "BatchEvalPython" in plan:
+        raise AssertionError("per-row Python (BatchEvalPython) found in plan:\n" + plan)
+
+
 def golden_tuples(golden_spans: list[list]) -> list[tuple]:
     return [tuple(s) for s in golden_spans]
 

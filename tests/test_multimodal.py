@@ -163,7 +163,7 @@ def test_strict_mode_marks_decode_seam(spark, media_df):
 
 
 def test_no_per_row_python(spark, media_df):
-    from pdf_extract_sys_spark.pipeline import assert_no_per_row_python
+    from conftest import assert_no_per_row_python
 
     assert_no_per_row_python(extract_media_features(media_df))
 

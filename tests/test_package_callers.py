@@ -1,6 +1,7 @@
 """No helper without a caller: every top-level function and class of the
-extraction kernels and of ``extract.py`` is referenced from package code
-outside its own definition. Test-only adapters belong in ``tests/``."""
+extraction kernels, of ``extract.py`` and of ``pipeline.py`` is referenced
+from package code outside its own definition. Test-only adapters belong in
+``tests/``."""
 
 from __future__ import annotations
 
@@ -30,7 +31,7 @@ def test_every_kernel_and_extract_definition_has_a_caller():
     trees = {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
     refs = {p: _references(t) for p, t in trees.items()}
     uncalled = []
-    for path in sorted((PKG / "kernels").glob("*.py")) + [PKG / "extract.py"]:
+    for path in sorted((PKG / "kernels").glob("*.py")) + [PKG / "extract.py", PKG / "pipeline.py"]:
         elsewhere = set().union(*(r for p, r in refs.items() if p != path))
         for d in trees[path].body:
             if (isinstance(d, (ast.FunctionDef, ast.ClassDef))

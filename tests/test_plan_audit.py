@@ -2,6 +2,8 @@
 
   * extraction normal path: zero Exchange (shuffle-free), PythonMapInArrow only,
     never BatchEvalPython (north rule: no per-row Python)
+  * the mega branch is planned from parquet footer statistics: left out when
+    they rule out a skew tail, kept whenever they cannot
   * relational queries: filters pushed to the parquet scan, column-pruned
     ReadSchema, broadcast joins where a side is small
 """
@@ -9,6 +11,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import rows_to_tuples
 from pyspark.sql import functions as F
 
 from pdf_extract_sys_spark import corpus as C
@@ -157,3 +160,104 @@ def test_size_col_routing_matches_default_and_prunes(spark, tmp_path):
     assert norm(a) == norm(b)
     plan = plan_of(b)
     assert "PushedFilters" in plan and "n_spans" in plan
+
+
+# ---------------------------------------------------------------------------
+# the plan chosen from parquet footer statistics of the size column
+# ---------------------------------------------------------------------------
+
+MEGA_THRESHOLD = 8  # spans; _mega_corpus() has one doc over it (14), the rest ≤ 6
+
+
+def _span_rows(df) -> dict:
+    return {r["doc_id"]: rows_to_tuples(r["spans"]) for r in df.collect()}
+
+
+def _mega_corpus():
+    return C.generate_corpus(32, seed=5, mega_doc_every=32, mega_doc_pages=12)
+
+
+def _is_direct(plan: str) -> bool:
+    """One scan, no shuffle, one Arrow map, no per-row Python."""
+    return (plan.count("FileScan") == 1 and "Exchange" not in plan
+            and plan.count("MapInArrow") == 1 and "BatchEvalPython" not in plan)
+
+
+def _is_union(plan: str) -> bool:
+    """Today's plan: the normal path unioned with the salted mega path."""
+    return "Union" in plan and len([ln for ln in plan.splitlines() if "Exchange" in ln]) == 2
+
+
+def _write(pdf, path: str, n_spans=None, **kw) -> str:
+    """pdf (doc_id, spans) → one parquet file of 8-row row groups, with an
+    ``n_spans`` column (the true span counts unless given)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_extract_sys_spark.schema import CORPUS_ARROW
+
+    os.makedirs(path, exist_ok=True)
+    tbl = pa.Table.from_pydict({
+        "doc_id": pa.array(pdf["doc_id"].tolist(), pa.string()),
+        "spans": pa.array(pdf["spans"].tolist(), CORPUS_ARROW.field("spans").type),
+        "n_spans": pa.array(n_spans or [len(x) for x in pdf["spans"]], pa.int32()),
+    })
+    pq.write_table(tbl, f"{path}/part-0.parquet", row_group_size=8, **kw)
+    return path
+
+
+def test_footer_stats_without_tail_plan_one_scan(spark, tmp_path):
+    pdf = C.generate_corpus(30, seed=3)
+    assert max(map(len, pdf["spans"])) <= MEGA_THRESHOLD
+    src = spark.read.parquet(_write(pdf, str(tmp_path / "c")))
+    out = extract_corpus(src, salt_threshold=MEGA_THRESHOLD, size_col="n_spans")
+    assert _is_direct(plan_of(out)), plan_of(out)
+    salted = extract_corpus(src, salt_threshold=0, salted_parallelism=3)
+    assert _is_union(plan_of(salted))
+    assert _span_rows(out) == _span_rows(salted)
+
+
+def test_one_row_group_over_threshold_keeps_mega_branch(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    pdf = _mega_corpus()
+    path = _write(pdf, str(tmp_path / "c"))
+    md = pq.read_metadata(f"{path}/part-0.parquet")
+    n_spans = md.num_columns - 1  # the last leaf column
+    highs = [md.row_group(g).column(n_spans).statistics.max for g in range(md.num_row_groups)]
+    assert sum(h > MEGA_THRESHOLD for h in highs) == 1, highs
+    out = extract_corpus(spark.read.parquet(path), salt_threshold=MEGA_THRESHOLD,
+                         size_col="n_spans")
+    assert _is_union(plan_of(out)), plan_of(out)
+
+
+def test_file_without_statistics_keeps_mega_branch(spark, tmp_path):
+    path = _write(C.generate_corpus(30, seed=3), str(tmp_path / "c"), write_statistics=False)
+    out = extract_corpus(spark.read.parquet(path), salt_threshold=MEGA_THRESHOLD,
+                         size_col="n_spans")
+    assert _is_union(plan_of(out)), plan_of(out)
+
+
+def test_in_memory_corpus_keeps_mega_branch(spark, tmp_path):
+    src = spark.read.parquet(_write(C.generate_corpus(30, seed=3), str(tmp_path / "c")))
+    mem = spark.createDataFrame(src.collect(), src.schema)
+    out = extract_corpus(mem, salt_threshold=MEGA_THRESHOLD, size_col="n_spans")
+    assert _is_union(plan_of(out)), plan_of(out)
+
+
+def test_under_reported_size_column_changes_only_the_plan(spark, tmp_path):
+    """An n_spans column that hides a real mega doc makes the footers rule out
+    the tail: the mega doc is extracted unsalted, and the output is still the
+    oracle's — routing is a performance choice only."""
+    from oracle import oracle_extract_corpus
+
+    pdf = _mega_corpus()
+    assert max(map(len, pdf["spans"])) > MEGA_THRESHOLD
+    path = _write(pdf, str(tmp_path / "c"), n_spans=[1] * len(pdf))
+    out = extract_corpus(spark.read.parquet(path), salt_threshold=MEGA_THRESHOLD,
+                         size_col="n_spans")
+    assert _is_direct(plan_of(out)), plan_of(out)
+    want = oracle_extract_corpus(pdf.to_dict("records"))
+    assert _span_rows(out) == {d: rows_to_tuples(spans) for d, spans in want.items()}

@@ -12,12 +12,12 @@ import uuid
 
 import pandas as pd
 import pytest
-from conftest import golden_tuples, rows_to_tuples
+from conftest import assert_no_per_row_python, golden_tuples, rows_to_tuples
 from fixtures_def import FILLER, fixture_docs
 
 from pdf_extract_sys_spark import corpus as C
 from pdf_extract_sys_spark.checkpoint import run_extraction, with_partition_id
-from pdf_extract_sys_spark.pipeline import assert_no_per_row_python, extract_corpus
+from pdf_extract_sys_spark.pipeline import extract_corpus
 from pdf_extract_sys_spark.schema import CORPUS_SCHEMA
 
 

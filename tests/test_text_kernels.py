@@ -227,3 +227,34 @@ def test_non_ascii_digit_header_matches_oracle(kind: str):
     want = oracle_extract_doc("d", doc["spans"])
     assert want[0]["kind"] == "text"
     assert _spans(row) == [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in want]
+
+
+def _ocr_lines_doc(lines: list[str]) -> dict:
+    """One ocr_words page: word i (w0, w1, ...) on line ``lines[i]``."""
+    recs = [f"w{i}\t90\t1\t2\t3\t4\t1\t{ln}" for i, ln in enumerate(lines)]
+    return {"doc_id": "d", "spans": [C.span("ocr_words", "\n".join(["PAGE\t1000\t1400", *recs]), None, 0)]}
+
+
+_BIG = 10**30  # past int64: the kernel compares normalized digit strings
+
+
+@pytest.mark.parametrize("lines", [
+    # equal as float64 (2^53 and 2^53 + 1), not as integers; leading zeros and -0
+    ["9007199254740992", "9007199254740993", "0007", "7", "-0", "0", "-5", "5"],
+    [str(_BIG), str(_BIG + 1), f"000{_BIG + 1}", "9007199254740992", "9007199254740993",
+     "-0", "0", "-00", str(-_BIG), str(_BIG)],
+], ids=["int64", "past-int64"])
+def test_ocr_line_numbers_compare_exactly(lines: list[str]):
+    doc = _ocr_lines_doc(lines)
+    (row,) = extract_rows([doc])
+    want = oracle_extract_doc("d", doc["spans"])
+    assert len(want) > 2 and want[0]["kind"] == "text"
+    assert _spans(row) == [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in want]
+
+
+def test_ocr_line_numbers_past_python_int_limit():
+    """FIXTURES.md: a line number of any length is valid and compared exactly;
+    past Python's int() digit limit the oracle cannot parse it and sentinels."""
+    a, b = "9" * 5000, "9" * 4999 + "8"
+    (row,) = extract_rows([_ocr_lines_doc([a, b, "0" + b])])
+    assert [s[1] for s in _spans(row)] == ["w0", "w1 w2"]
