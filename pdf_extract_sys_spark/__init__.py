@@ -8,8 +8,9 @@ as a distributed batch dataflow over tables of interleaved text + media document
            spans ARRAY<STRUCT<kind STRING, text STRING, media_ref STRING, offset INT>>)
 
 Extraction runs as vectorized pandas/Arrow code inside ``mapInArrow``: one pass
-over the scanned docs on the normal path; on the salted mega-doc path a routing
-pass, a round-robin repartition, a chunk pass and a ``groupBy(doc_id)``
+over the scanned docs on the normal path; on the salted mega-doc path a pass
+that routes each doc and cuts it into reading-order slices, a round-robin
+repartition, the same extraction pass over the slices and a ``groupBy(doc_id)``
 reassembly. No per-row Python appears in the Spark plan (its Python nodes are
 ``MapInArrow``, never ``BatchEvalPython``).
 

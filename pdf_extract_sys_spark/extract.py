@@ -1,14 +1,15 @@
 """Per-batch extraction orchestration: input span rows → ordered output spans.
 
 This module is the ONLY Python that runs on the hot path, invoked from
-``pipeline.py`` via ``mapInArrow``, over whole docs (zero shuffle) or over salted
-mega-doc chunks. Everything inside is vectorized pandas over Arrow batches.
+``pipeline.py`` via ``mapInArrow``, over whole docs (zero shuffle) or over the
+reading-order slices of salted mega docs, which it takes as ordinary docs.
+Everything inside is vectorized pandas over Arrow batches.
 
 Doc codes: every step keys a doc by an integer code ``doc`` in
-``range(len(all_doc_ids))``, never by the ``doc_id`` string. On the normal path
-the code is the doc's row in its Arrow batch, so two rows sharing a ``doc_id``
-are two independent docs; the chunk path factorizes its ``doc_id`` column once.
-The string only comes back in sentinel text and in the output batch.
+``range(len(all_doc_ids))``, never by the ``doc_id`` string. The code is the
+doc's row in its Arrow batch, so two rows sharing a ``doc_id`` are two
+independent docs. The string only comes back in sentinel text and in the output
+batch.
 
 Routing semantics (reference: ``backend/app/main.py:171-205``):
   * a doc is *searchable* iff ANY of its pdf_chars pages has stripped text length
@@ -89,10 +90,10 @@ def _assemble(
     failed: np.ndarray,
     bytes_in: np.ndarray,
     all_doc_ids: np.ndarray,
-    enumerate_offsets: bool,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Drop failed docs' rows, add one sentinel per failed doc, order every doc's
-    rows by (in_off, pos, seq) and build the metrics aligned with all_doc_ids."""
+    rows by (in_off, pos, seq), number them per doc (``out_offset``) and build
+    the metrics aligned with all_doc_ids."""
     codes = np.flatnonzero(failed)
     sentinels = _rows(codes, -1, -1, 0, KIND_ERROR,
                       [f"[Error processing doc {d}]" for d in all_doc_ids[codes]], None)
@@ -103,11 +104,7 @@ def _assemble(
                         rows["in_off"].to_numpy(), doc))
     rows = rows.iloc[order].reset_index(drop=True)
     doc = doc[order]
-    if enumerate_offsets:
-        rows["out_offset"] = (grouped_cumsum(np.ones(len(doc), np.int64), doc) - 1).astype(np.int32)
-        out = rows[["doc", "out_offset", "kind", "text", "media_ref"]]
-    else:
-        out = rows[_ROW_COLS]
+    rows["out_offset"] = (grouped_cumsum(np.ones(len(doc), np.int64), doc) - 1).astype(np.int32)
     metrics = pd.DataFrame(
         {
             "n_spans": np.bincount(doc, minlength=len(all_doc_ids)),
@@ -115,14 +112,12 @@ def _assemble(
             "bytes_in": bytes_in,
         }
     )
-    return out, metrics
+    return rows[["doc", "out_offset", "kind", "text", "media_ref"]], metrics
 
 
 def extract_docs(
     span_rows: pd.DataFrame,
     all_doc_ids: np.ndarray,
-    *,
-    enumerate_offsets: bool = True,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Core vectorized extraction over exploded input spans.
 
@@ -132,15 +127,13 @@ def extract_docs(
       * ``pos`` — the span's index within its doc's input array (tie-break
         for duplicate offsets);
       * ``text_bytes`` — utf-8 byte length of ``text`` (0 for NULL);
-      * optionally ``route`` — doc-level routing override for the salted
-        mega-doc path ('text' | 'ocr' | None): a chunk cannot see the sibling
-        pages that decide the searchable classifier, so the pipeline
-        pre-computes it (SURVEY.md §2 S5).
+      * optionally ``route`` — doc-level routing override ('text' | 'ocr' |
+        None) for the slices of a salted mega doc: a slice cannot see the
+        pages of its sibling slices that decide the searchable classifier, so
+        ``pipeline._slice_mega_docs`` pre-computes it (SURVEY.md §2 S5).
     all_doc_ids: the doc_id of every code (docs with zero input spans included).
-    With enumerate_offsets=False, returns rows keyed (doc, in_off, pos, seq)
-    WITHOUT final per-doc offset enumeration (sentinels get in_off=-1) — the salted
-    path enumerates after reassembling all chunks of a doc.
-    Returns (out_spans, metrics) — out_spans sorted by doc then reading order,
+    Returns (out_spans, metrics) — out_spans (doc, out_offset, kind, text,
+    media_ref) sorted by doc then reading order, ``out_offset`` numbering it;
     metrics columns (n_spans, parse_failed, bytes_in) row-aligned with all_doc_ids.
     May raise — callers go through :func:`extract_docs_safe`.
     """
@@ -174,8 +167,8 @@ def extract_docs(
     page_doc = pdf_ev.page_tab["doc_id"].to_numpy(np.int64)
     searchable = np.zeros(n_docs, dtype=bool)
     searchable[page_doc[plens > SEARCHABLE_THRESHOLD]] = True
-    # mega-doc chunk path: the pipeline pre-computed doc-level routing (a chunk
-    # cannot see sibling pages) — apply the override
+    # a salted mega doc's slice: the pipeline pre-computed doc-level routing
+    # (a slice cannot see its sibling slices' pages) — apply the override
     if "route" in sr.columns:
         route = sr["route"].to_numpy(dtype=object)
         searchable[doc[route == "text"]] = True
@@ -222,15 +215,12 @@ def extract_docs(
         _rows(pt["doc"], pt["offset"], pt["pos"], 0, np.where(page_err, KIND_ERROR, pt_kind),
               pt_text, pt["media_ref"]),
     ]
-    return _assemble([p for p in parts if len(p)], failed, bytes_in, all_doc_ids,
-                     enumerate_offsets)
+    return _assemble([p for p in parts if len(p)], failed, bytes_in, all_doc_ids)
 
 
 def extract_docs_safe(
     span_rows: pd.DataFrame,
     all_doc_ids: np.ndarray,
-    *,
-    enumerate_offsets: bool = True,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Sentinel-totality wrapper (main.py:361-372) — the batch never fails. On an
     unexpected kernel exception it bisects the doc codes: each half re-runs on
@@ -238,21 +228,18 @@ def extract_docs_safe(
     raising docs stand alone and become sentinels (cold path; one poison doc
     costs about 2·log2(docs) re-runs)."""
     try:
-        return extract_docs(span_rows, all_doc_ids, enumerate_offsets=enumerate_offsets)
+        return extract_docs(span_rows, all_doc_ids)
     except Exception:
         n = len(all_doc_ids)
         if n == 0:
             raise
         if n == 1:
-            return _assemble([], np.ones(1, dtype=bool), np.zeros(1, np.int64),
-                             all_doc_ids, enumerate_offsets)
+            return _assemble([], np.ones(1, dtype=bool), np.zeros(1, np.int64), all_doc_ids)
         mid = n // 2
         doc = span_rows["doc"].to_numpy()
-        lo_out, lo_met = extract_docs_safe(span_rows.loc[doc < mid], all_doc_ids[:mid],
-                                           enumerate_offsets=enumerate_offsets)
+        lo_out, lo_met = extract_docs_safe(span_rows.loc[doc < mid], all_doc_ids[:mid])
         hi_out, hi_met = extract_docs_safe(
-            span_rows.loc[doc >= mid].assign(doc=doc[doc >= mid] - mid), all_doc_ids[mid:],
-            enumerate_offsets=enumerate_offsets,
+            span_rows.loc[doc >= mid].assign(doc=doc[doc >= mid] - mid), all_doc_ids[mid:]
         )
         return (pd.concat([lo_out, hi_out.assign(doc=hi_out["doc"] + mid)], ignore_index=True),
                 pd.concat([lo_met, hi_met], ignore_index=True))
@@ -279,7 +266,8 @@ def _explode_spans(spans: pa.ListArray) -> tuple[np.ndarray, np.ndarray, dict[st
 def _record_batch_to_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, pd.DataFrame]:
     """Flatten a (doc_id, spans list<struct>) Arrow batch to exploded pandas span
     rows (the :func:`extract_docs` input) using Arrow list offsets — vectorized,
-    no Python per row. Returns (doc_id per code, span rows)."""
+    no Python per row. A ``route`` column (a salted slice's doc-level routing)
+    is copied onto its spans. Returns (doc_id per code, span rows)."""
     doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
     doc, pos, f = _explode_spans(batch.column("spans"))
     span_rows = pd.DataFrame(
@@ -296,6 +284,8 @@ def _record_batch_to_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, pd.DataFra
             ),
         }
     )
+    if "route" in batch.schema.names:
+        span_rows["route"] = batch.column("route").to_numpy(zero_copy_only=False)[doc]
     return doc_ids, span_rows
 
 
@@ -339,9 +329,9 @@ def _rows_to_record_batch(
 
 def _prepare_worker() -> None:
     """Per-task set-up of a Python worker, called at the top of every Python entry
-    point of the extraction plan: ``extract_map_in_arrow``,
-    ``extract_chunk_map_in_arrow`` and the mega-doc router
-    ``pipeline._route_mega_docs``. Its effects last for the rest of the
+    point of the extraction plan: ``extract_map_in_arrow`` (the salted slices
+    reach it through ``pipeline._extract_slices``) and the mega-doc slicer
+    ``pipeline._slice_mega_docs``. Its effects last for the rest of the
     (reused) worker's life; repeat calls cost microseconds.
 
       * Pin pyarrow's thread pools to one thread. Spark already owns the
@@ -380,39 +370,3 @@ def extract_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
         out, metrics = extract_docs_safe(span_rows, doc_ids)
         yield _rows_to_record_batch(doc_ids, out, metrics)
 
-
-def extract_chunk_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow function for the salted mega-doc path: chunk rows (one row per
-    input span, with pre-computed doc routing) in, CHUNK_OUT_ARROW rows out — no
-    final offset enumeration (the reassembly groupBy seals offsets). One marker
-    row per doc carries the chunk's input byte count so the reassembly needs no
-    extra joins/aggregations. Chunk rows are grouped by ``doc_id`` (one code per
-    distinct id): the path's input contract is unique doc ids."""
-    from .schema import CHUNK_MARKER_OFF, CHUNK_OUT_ARROW, KIND_CHUNK_MARKER
-
-    _prepare_worker()
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        df = batch.to_pandas()
-        df["doc"], doc_ids = pd.factorize(df["doc_id"])
-        doc_ids = doc_ids.to_numpy(dtype=object)
-        df["text_bytes"] = pc.fill_null(
-            pc.binary_length(batch.column("text")), 0
-        ).to_numpy(zero_copy_only=False)
-        out, metrics = extract_docs_safe(df, doc_ids, enumerate_offsets=False)
-        markers = pd.DataFrame(
-            {
-                "doc": np.arange(len(doc_ids)),
-                "in_off": np.int64(CHUNK_MARKER_OFF),
-                "pos": np.int64(0),
-                "seq": np.int64(0),
-                "kind": KIND_CHUNK_MARKER,
-                "text": None,
-                "media_ref": None,
-                "bytes_in": metrics["bytes_in"].to_numpy(np.int64),
-            }
-        )
-        out = pd.concat([out.assign(bytes_in=np.int64(0)), markers], ignore_index=True)
-        out.insert(0, "doc_id", doc_ids[out.pop("doc").to_numpy()])
-        yield pa.RecordBatch.from_pandas(out, schema=CHUNK_OUT_ARROW, preserve_index=False)

@@ -309,8 +309,8 @@ def segment_sentences_core(ev: PdfEvents) -> pd.DataFrame:
 def payload_stripped_lengths(payloads: pd.Series) -> pd.Series:
     """Per-payload ``len(full_text.strip())`` (the searchable-classifier input,
     main.py:62-64); -1 for malformed payloads. Payloads must be strings. The
-    salted mega-doc path's router (``pipeline._route_mega_docs``) calls it on the
-    non-NULL pdf_chars payloads of whole docs."""
+    salted mega-doc path's slicer (``pipeline._slice_mega_docs``) calls it on
+    the non-NULL pdf_chars payloads of whole docs."""
     idx = pd.RangeIndex(len(payloads))
     frame = pd.DataFrame(
         {

@@ -9,12 +9,14 @@ local[N]:
   * **Mega docs** (the skew tail, size(spans) > salt_threshold): the reference has
     no answer for these (it capped pages at 2000 and sharded per-container,
     main.py:167-170 / load_balancer.py); here one ``mapInArrow`` pass over the whole
-    docs tags each with its routing (the doc-level searchable classifier,
-    main.py:57-66), each is exploded to per-span rows, rows are round-robin
-    repartitioned across the cluster (this IS the salting — one doc's pages land
-    on many executors), extracted chunk-wise, and reassembled with
-    groupBy(doc_id) + array_sort, sealing the final reading-order offsets.
-    Shuffles touch only the mega tail, never the main corpus.
+    docs decides each doc's routing (the doc-level searchable classifier,
+    main.py:57-66) and cuts its spans, in reading order, into contiguous slices;
+    the slice rows are round-robin repartitioned across the cluster (this IS
+    the salting — one doc's slices land on many executors), extracted by
+    ``extract_map_in_arrow`` as ordinary docs, and reassembled with
+    groupBy(doc_id): slices in order, offsets renumbered by position, or the
+    doc's sentinel when a slice failed. Shuffles touch only the mega tail,
+    never the main corpus.
 
 The two sub-plans union to one DataFrame with EXTRACTED_SCHEMA; a plan built
 knowing the tail is empty is the normal path alone (see extract_corpus). Plan
@@ -24,6 +26,7 @@ audit: only MapInArrow Python nodes — never BatchEvalPython (north rule).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial, update_wrapper
 from urllib.parse import unquote, urlparse
 
 import numpy as np
@@ -34,36 +37,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .extract import (
-    SEARCHABLE_THRESHOLD,
-    _explode_spans,
-    _prepare_worker,
-    extract_chunk_map_in_arrow,
-    extract_map_in_arrow,
-)
+from .extract import SEARCHABLE_THRESHOLD, _explode_spans, _prepare_worker, extract_map_in_arrow
 from .kernels.pdf_text import payload_stripped_lengths
-from .schema import (
-    CHUNK_OUT_SCHEMA,
-    EXTRACTED_SCHEMA,
-    KIND_CHUNK_MARKER,
-    KIND_ERROR,
-    KIND_PDF_CHARS,
-)
+from .schema import EXTRACTED_SCHEMA, KIND_PDF_CHARS
 
 DEFAULT_SALT_THRESHOLD = 256  # spans per doc above which a doc is salted
 
 
-def _route_mega_docs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow over whole mega docs: (doc_id, spans) in, (doc_id, spans,
-    route) out, ``spans`` passed through untouched. The doc-level searchable
-    classifier (main.py:57-66) runs here because a salted chunk cannot see the
-    sibling pages that decide it: route = 'text' iff ANY pdf_chars page's
-    stripped text is longer than SEARCHABLE_THRESHOLD, else 'ocr' (docs with
-    no pdf_chars page, NULL payloads and malformed ones, length -1, included)."""
+def _slice_mega_docs(batches: Iterator[pa.RecordBatch], parts: int) -> Iterator[pa.RecordBatch]:
+    """mapInArrow over whole mega docs: (doc_id, spans) in, one row per slice
+    (doc_id, slice, spans, route) out. Each doc's spans are put in reading
+    order — offset (NULL read as 0, as extract._record_batch_to_rows does),
+    then array position — and cut into min(spans, ``parts``) contiguous slices
+    of near-equal span counts, numbered in that order. Every doc has at least
+    one span (extract_corpus salts only docs over a threshold >= 0).
+
+    route is the doc-level searchable classifier (main.py:57-66), decided here
+    because a slice cannot see the sibling pages that decide it: 'text' iff
+    ANY pdf_chars page's stripped text is longer than SEARCHABLE_THRESHOLD,
+    else 'ocr' (docs with no pdf_chars page, NULL payloads and malformed
+    ones, length -1, included)."""
     _prepare_worker()
     for batch in batches:
         spans = batch.column("spans")
-        doc, _, f = _explode_spans(spans)
+        doc, pos, f = _explode_spans(spans)
         kind, text = f["kind"], f["text"]
         # NULL payloads are left out: decode_pdf_core takes strings only
         is_pdf = pc.fill_null(pc.and_(pc.equal(kind, KIND_PDF_CHARS), pc.is_valid(text)), False)
@@ -74,84 +71,65 @@ def _route_mega_docs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
         searchable = np.zeros(len(spans), dtype=bool)
         searchable[pdf_doc[plens > SEARCHABLE_THRESHOLD]] = True
         route = pa.array(np.where(searchable, "text", "ocr"), pa.string())
+
+        # the sort keeps each doc's spans where they were, so the span at
+        # sorted position j is the one of reading-order rank pos[j] in its doc
+        order = np.lexsort((pos, pc.fill_null(f["offset"], 0).to_numpy(), doc))
+        n = np.diff(spans.offsets.to_numpy())[doc]
+        piece = pos * np.minimum(n, parts) // n
+        # a doc boundary is a cut too: a one-slice doc's slice 0 may meet the next doc's
+        cut = np.flatnonzero((np.diff(doc, prepend=-1) != 0) | (np.diff(piece, prepend=-1) != 0))
         yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id"), spans, route], names=["doc_id", "spans", "route"]
+            [
+                batch.column("doc_id").take(doc[cut]),
+                pa.array(piece[cut], pa.int32()),
+                pa.ListArray.from_arrays(pa.array(np.append(cut, len(doc)), pa.int32()),
+                                         spans.flatten().take(order)),
+                route.take(doc[cut]),
+            ],
+            names=["doc_id", "slice", "spans", "route"],
         )
+
+
+def _extract_slices(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """extract_map_in_arrow over slice rows, each taken as an ordinary doc;
+    every output row keeps its slice number."""
+    for batch in batches:
+        for out in extract_map_in_arrow(iter([batch])):
+            yield out.append_column("slice", batch.column("slice"))
 
 
 def _extract_salted(mega: DataFrame, salted_parallelism: int | None) -> DataFrame:
-    """Mega-doc path: classify → explode → spread → chunk-extract → reassemble."""
-    routed_schema = T.StructType(mega.schema.fields + [T.StructField("route", T.StringType())])
-    routed = mega.mapInArrow(_route_mega_docs, routed_schema).select(
-        "doc_id",
-        F.posexplode("spans").alias("pos", "s"),
-        "route",
-    ).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").cast("long").alias("offset"),
-        "route",
-    )
+    """Mega-doc path: classify and slice → spread → extract → reassemble. The
+    reassembly keys on doc_id: the path's input contract is unique doc ids."""
+    parts = salted_parallelism or int(
+        mega.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    slice_field = T.StructField("slice", T.IntegerType())
+    # named after the function, so the plan reads MapInArrow _slice_mega_docs
+    slicer = update_wrapper(partial(_slice_mega_docs, parts=parts), _slice_mega_docs)
+    sliced = mega.mapInArrow(slicer, T.StructType([
+        mega.schema["doc_id"], slice_field, mega.schema["spans"],
+        T.StructField("route", T.StringType()),
+    ]))
+    # salting: round-robin spread of one doc's slices across the cluster
+    extracted = sliced.repartition(parts).mapInArrow(
+        _extract_slices, T.StructType(EXTRACTED_SCHEMA.fields + [slice_field]))
 
-    # salting: round-robin spread of one doc's spans across the cluster
-    chunks = routed.repartition(salted_parallelism) if salted_parallelism else routed.repartition(
-        int(mega.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    )
-    chunk_out = chunks.mapInArrow(extract_chunk_map_in_arrow, CHUNK_OUT_SCHEMA)
-
-    # reassembly: the ONLY shuffle that touches extraction output, and only for the
-    # mega tail. Marker rows (one per doc per chunk) carry input-byte counts and
-    # guarantee zero-span docs still appear — no extra joins or aggregations.
-    # array_sort orders lexicographically on (in_off, pos, seq) — unique per doc,
-    # so nullable fields never get compared; markers (in_off=2^62) sort last.
-    assembled = chunk_out.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("in_off", "pos", "seq", "kind", "text", "media_ref"))
-        ).alias("arr"),
+    # reassembly: the ONLY shuffle that touches extraction output, and only for
+    # the mega tail. A failed slice's spans are already the doc's one sentinel
+    # span at offset 0 (extract._assemble names the doc_id in it); page-scoped
+    # error spans are data and leave parse_failed unset.
+    assembled = extracted.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(F.struct("slice", "parse_failed", "spans"))).alias("parts"),
         F.sum("bytes_in").alias("bytes_in"),
     )
-    real = F.filter("arr", lambda s: s["kind"] != F.lit(KIND_CHUNK_MARKER))
-    # DOC-level sentinels only (in_off == -1): page-scoped error spans
-    # (kind='error' at a real page offset, r4 VERDICT #3) are DATA — they must
-    # not promote the whole doc to a sentinel, matching main.py:361-372
-    has_err = F.exists(
-        "arr",
-        lambda s: (s["kind"] == F.lit(KIND_ERROR)) & (s["in_off"] == F.lit(-1)),
-    )
-    spans_ok = F.transform(
-        real,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    sentinel = F.array(
-        F.struct(
-            F.lit(KIND_ERROR).alias("kind"),
-            F.concat(F.lit("[Error processing doc "), F.col("doc_id"), F.lit("]")).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("int").alias("offset"),
-        )
-    )
-
-    out = assembled.select(
-        "doc_id",
-        F.when(has_err, sentinel).otherwise(spans_ok).alias("spans"),
-        has_err.alias("parse_failed"),
-        F.col("bytes_in").cast("long").alias("bytes_in"),
-    ).select(
-        "doc_id",
-        "spans",
-        F.size("spans").cast("long").alias("n_spans"),
-        "parse_failed",
-        "bytes_in",
-    )
-    return out
+    failed = F.get(F.filter("parts", lambda p: p["parse_failed"]), 0)
+    joined = F.transform(F.flatten(F.transform("parts", lambda p: p["spans"])),
+                         lambda s, i: s.withField("offset", i))
+    out = assembled.select("doc_id", F.coalesce(failed["spans"], joined).alias("spans"),
+                           failed.isNotNull().alias("parse_failed"), "bytes_in")
+    return out.select("doc_id", "spans", F.size("spans").cast("long").alias("n_spans"),
+                      "parse_failed", "bytes_in")
 
 
 def _stats_max(corpus: DataFrame, col: str) -> int | None:
@@ -197,7 +175,14 @@ def extract_corpus(
     the caller-stated ``max_spans``, else by ``size_col``'s footer statistics
     (_stats_max) — it is the normal path alone: one scan, zero Exchanges.
     Salted ≡ unsalted, so a wrong bound costs time, never output. (Iceberg
-    manifest ``upper_bounds`` could stand in for the footers of a table.)"""
+    manifest ``upper_bounds`` could stand in for the footers of a table.)
+
+    Raises ValueError unless ``salt_threshold >= 0`` (a negative one would
+    salt zero-span docs) and ``salted_parallelism`` is None or >= 1."""
+    if not salt_threshold >= 0:
+        raise ValueError(f"salt_threshold must be >= 0, got {salt_threshold!r}")
+    if salted_parallelism is not None and not salted_parallelism >= 1:
+        raise ValueError(f"salted_parallelism must be None or >= 1, got {salted_parallelism!r}")
     if max_spans is None and size_col:
         max_spans = _stats_max(corpus, size_col)
     if max_spans is not None and max_spans <= salt_threshold:

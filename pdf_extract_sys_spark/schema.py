@@ -71,42 +71,6 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-# Salted mega-doc chunk path: per-chunk extraction output BEFORE reassembly —
-# (in_off, pos, seq) is the deterministic reading-order sort key; final offsets
-# are sealed after the groupBy(doc_id) reassembly (SURVEY.md §7 step 2).
-CHUNK_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), nullable=False),
-        T.StructField("in_off", T.LongType(), nullable=False),
-        T.StructField("pos", T.LongType(), nullable=False),
-        T.StructField("seq", T.LongType(), nullable=False),
-        T.StructField("kind", T.StringType(), nullable=False),
-        T.StructField("text", T.StringType(), nullable=True),
-        T.StructField("media_ref", T.StringType(), nullable=True),
-        T.StructField("bytes_in", T.LongType(), nullable=False),
-    ]
-)
-
-CHUNK_OUT_ARROW = pa.schema(
-    [
-        pa.field("doc_id", pa.string(), nullable=False),
-        pa.field("in_off", pa.int64(), nullable=False),
-        pa.field("pos", pa.int64(), nullable=False),
-        pa.field("seq", pa.int64(), nullable=False),
-        pa.field("kind", pa.string(), nullable=False),
-        pa.field("text", pa.string(), nullable=True),
-        pa.field("media_ref", pa.string(), nullable=True),
-        pa.field("bytes_in", pa.int64(), nullable=False),
-    ]
-)
-
-# per-(doc, chunk) marker row emitted by the chunk UDF: carries the chunk's input
-# byte count and guarantees every doc appears in the reassembly groupBy even when
-# it produced zero spans. in_off = 2^62 sorts after all real spans; filtered out
-# of the final array.
-KIND_CHUNK_MARKER = "__chunk__"
-CHUNK_MARKER_OFF = 1 << 62
-
 # ---------------------------------------------------------------------------
 # Checkpoint table — replaces the reference's Redis JobStatus record
 # (``main.py:47-54, 94-125``): one row per (run_id, partition_id) attempt;

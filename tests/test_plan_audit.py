@@ -59,11 +59,13 @@ def test_no_per_row_python_full_pipeline(spark, corpus_path):
 def test_mega_path_routes_in_one_arrow_pass(spark, corpus_path):
     """The mega docs' doc-level routing is computed in the MapInArrow pass that
     holds each whole doc: no classifier UDF node, no join back onto the spans,
-    and only the two shuffles salting needs (the round-robin spread and the
-    reassembly by doc_id)."""
+    no per-span explode (the pass emits slices of docs), and only the two
+    shuffles salting needs (the round-robin spread and the reassembly by
+    doc_id)."""
     plan = plan_of(extract_corpus(spark.read.parquet(corpus_path), salt_threshold=4))
     assert "BroadcastHashJoin" not in plan, plan
     assert "ArrowEvalPython" not in plan, plan
+    assert "Generate" not in plan, plan
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
     assert len(exchanges) == 2, plan
     assert "RoundRobinPartitioning" in exchanges[1] and "hashpartitioning(doc_id" in exchanges[0], plan

@@ -12,18 +12,26 @@ import uuid
 
 import pandas as pd
 import pytest
+from pyspark.sql import types as T
 from conftest import assert_no_per_row_python, golden_tuples, rows_to_tuples
 from fixtures_def import FILLER, fixture_docs
 
 from pdf_extract_sys_spark import corpus as C
 from pdf_extract_sys_spark.checkpoint import run_extraction, with_partition_id
 from pdf_extract_sys_spark.pipeline import extract_corpus
-from pdf_extract_sys_spark.schema import CORPUS_SCHEMA
+from pdf_extract_sys_spark.schema import CORPUS_SCHEMA, SPAN_STRUCT
+
+# CORPUS_SCHEMA with a nullable span offset: ROUTING_DOCS holds NULL offsets
+NULL_OFFSET_SCHEMA = T.StructType([
+    CORPUS_SCHEMA["doc_id"],
+    T.StructField("spans", T.ArrayType(T.StructType(
+        [*SPAN_STRUCT.fields[:3], T.StructField("offset", T.IntegerType())]))),
+])
 
 
-def make_input(spark, tmp_path, docs: pd.DataFrame, name="corpus") -> str:
+def make_input(spark, tmp_path, docs: pd.DataFrame, name="corpus", schema=CORPUS_SCHEMA) -> str:
     path = str(tmp_path / name)
-    spark.createDataFrame(docs.to_dict("records"), schema=CORPUS_SCHEMA).write.mode(
+    spark.createDataFrame(docs.to_dict("records"), schema=schema).write.mode(
         "overwrite"
     ).parquet(path)
     return path
@@ -56,7 +64,12 @@ def _ocr_page(word: str) -> str:
     return C.encode_ocr_page([(word, 90, 10, 20, 60, 12, 1, 1)])
 
 
-# multi-page docs whose doc-level routing a single salted chunk cannot decide
+def _pdf(text: str, offset: int | None) -> dict:
+    return C.span("pdf_chars", C.encode_pdf_text(text), None, offset)
+
+
+# multi-page docs whose doc-level routing a single salted slice cannot decide,
+# and docs whose reading order or failure a slice cut could get wrong
 ROUTING_DOCS = pd.DataFrame(
     [
         # the only searchable pdf_chars page is the doc's last span: 'text'
@@ -84,34 +97,66 @@ ROUTING_DOCS = pd.DataFrame(
                    None, 0),
             C.span("ocr_words", _ocr_page("Scanned."), None, 1),
         ]},
+        # spans stored out of offset order
+        {"doc_id": "R05", "spans": [
+            _pdf("Page three comes last.", 3), _pdf(FILLER, 0),
+            C.span("html", "<p>The html page sits at offset two of this doc.</p>", None, 2),
+            _pdf("Page one follows the filler.", 1),
+        ]},
+        # equal offsets: with 2 slices, the offset-1 pages straddle the cut
+        {"doc_id": "R06", "spans": [
+            _pdf(FILLER, 0), _pdf("First page at one.", 1), _pdf("Second page at one.", 1),
+            C.span("html", "<p>An html page also sits at offset one here.</p>", None, 1),
+        ]},
+        # NULL offsets read as 0, tied by array position
+        {"doc_id": "R07", "spans": [
+            _pdf(FILLER, 2), _pdf("A page with no offset.", None),
+            C.span("media", None, "img:R07", None), _pdf("The page at one.", 1),
+        ]},
+        # page_error and html spans beside pdf pages: page-scoped, not a sentinel
+        {"doc_id": "R08", "spans": [
+            _pdf(FILLER, 0), C.span("page_error", None, "page:1", 1),
+            C.span("html", "<p>The html page comes after the broken page.</p>", None, 2),
+            _pdf("The last pdf page.", 3),
+        ]},
+        # the only doc-level failure (an unknown kind) is last in reading order
+        {"doc_id": "R09", "spans": [
+            C.span("bogus", "?", None, 5), _pdf(FILLER, 0),
+            *(_pdf(f"Page {i} reads fine.", i) for i in range(1, 5)),
+        ]},
     ]
 )
 
 
 def test_salt_invariance(spark, tmp_path, small_corpus):
     """F19: forcing every doc through the salted path yields byte-identical output,
-    including when the salt spreads each doc over at least as many chunks as it
-    has spans, so the chunks hold single pages of it."""
+    including when the salt spreads each doc over at least as many slices as it
+    has spans, so the slices hold single pages of it, and when it cuts each doc
+    into one or two slices."""
     docs = pd.concat([small_corpus, ROUTING_DOCS], ignore_index=True)
-    path = make_input(spark, tmp_path, docs)
+    path = make_input(spark, tmp_path, docs, schema=NULL_OFFSET_SCHEMA)
     src = spark.read.parquet(path)
     unsalted = collect_spans(extract_corpus(src, salt_threshold=10**9))
     assert unsalted["R01"][-1][0] == "text" and unsalted["R02"][0][0] == "text"
     assert unsalted["R03"] == [("error", "[Error processing doc R03]", None, 0)]
     assert unsalted["R04"] and all(s[0] == "text" for s in unsalted["R04"])
-    fully_salted = collect_spans(extract_corpus(src, salt_threshold=0, salted_parallelism=7))
-    assert fully_salted == unsalted
+    assert unsalted["R05"][-1][1] == "Page three comes last."
+    assert [s[1] for s in unsalted["R07"][:2]] == ["A page with no offset.", None]
+    assert ("error", "[Error processing page 1]", "page:1", 1) in unsalted["R08"]
+    assert unsalted["R09"] == [("error", "[Error processing doc R09]", None, 0)]
     widest = int(docs["spans"].str.len().max())
-    page_chunks = collect_spans(
-        extract_corpus(src, salt_threshold=0, salted_parallelism=widest)
-    )
-    assert page_chunks == unsalted
+    for parallelism in (7, widest, 1, 2):
+        salted = collect_spans(
+            extract_corpus(src, salt_threshold=0, salted_parallelism=parallelism)
+        )
+        assert salted == unsalted, parallelism
     mixed = collect_spans(extract_corpus(src, salt_threshold=6))
     assert mixed == unsalted
 
 
 def test_salted_metrics_match_unsalted(spark, tmp_path, small_corpus):
-    path = make_input(spark, tmp_path, small_corpus)
+    docs = pd.concat([small_corpus, ROUTING_DOCS], ignore_index=True)
+    path = make_input(spark, tmp_path, docs, schema=NULL_OFFSET_SCHEMA)
     src = spark.read.parquet(path)
     a = {
         r["doc_id"]: (r["n_spans"], r["parse_failed"], r["bytes_in"])
@@ -122,6 +167,18 @@ def test_salted_metrics_match_unsalted(spark, tmp_path, small_corpus):
         for r in extract_corpus(src, salt_threshold=0).collect()
     }
     assert a == b
+
+
+@pytest.mark.parametrize("kw", [dict(salt_threshold=-1), dict(salted_parallelism=0)])
+def test_extract_corpus_refuses_bad_salting(spark, tmp_path, kw):
+    """A negative threshold would send zero-span docs down the salted path,
+    where they vanish; a parallelism below 1 cannot spread anything."""
+    path = make_input(spark, tmp_path, pd.DataFrame(
+        [{"doc_id": "empty", "spans": []},
+         {"doc_id": "one", "spans": [C.span("pdf_chars", C.encode_pdf_text(FILLER), None, 0)]}]
+    ), name="tiny")
+    with pytest.raises(ValueError):
+        extract_corpus(spark.read.parquet(path), **kw)
 
 
 def test_idempotent_resume(spark, tmp_path, small_corpus):
@@ -257,7 +314,7 @@ def test_page_error_spans_survive_salting_without_doc_sentinel(spark, tmp_path):
     """A page_error input span (r4 VERDICT #3) must come out as a page-scoped
     '[Error processing page N]' span — IDENTICALLY on the normal and the
     salted path — and must NOT mark the doc parse_failed or promote it to the
-    doc-level sentinel (only in_off=-1 sentinels do that)."""
+    doc-level sentinel (only a doc-level failure does that)."""
     payload = "PAGE\t612\t792\n" + "\n".join(
         f"{ord(c):08x}\t{10 + 7 * i}\t760\t{17 + 7 * i}\t772"
         for i, c in enumerate(
